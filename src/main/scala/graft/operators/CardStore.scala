@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.sources.{AdditiveLedger, DeltaParts, TableSink, WriterLease}
+import graft.sources.{AdditiveStore, StoreCheck, TableSink, WriterLease}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -29,22 +29,30 @@ import org.apache.spark.sql.functions._
  *    a scale where even the fingerprint relation is only probed, never
  *    aggregated.
  *
- * Layout: `dir/stats` parts on one [[AdditiveLedger]] (replay-guarded
+ * Layout: `dir/stats` parts on one [[AdditiveStore]] kernel (replay-guarded
  * named appends, deferred-GC compaction, snapshot tags), `dir/fps` a
  * key-hash-bucketed [[TableSink]] keyed (source, lang, fingerprint) —
  * probes open only the batch keys' buckets; payload text never enters
  * either relation (16-byte md5 only).
  *
+ * Snapshot tags pin the stats parts only: [[card]] with a tag replays
+ * byte-identically (the fingerprint counts are already folded into the
+ * pinned parts). A [[restore]] leaves the fingerprint relation holding
+ * rows absorbed after the tag — harmless for the restored card, but
+ * those fingerprints keep POST-tag content deduplicated; a true content
+ * rollback re-inits.
+ *
  * INSERT-ONLY like [[StatsStore]] (GK summaries are not subtractable);
  * removing documents from the card means re-init over the survivors.
  */
-object CardStore {
+object CardStore extends AdditiveStore.Lifecycle {
 
-  private def statsDir(dir: String) = s"$dir/stats"
+  val kernel: AdditiveStore = AdditiveStore("card store", Seq("stats"))
+
   private def fpsDir(dir: String) = s"$dir/fps"
   private val FpKeys = Seq("source", "lang", "__fp")
 
-  def exists(dir: String): Boolean = DeltaParts.list(dir).nonEmpty
+  def exists(dir: String): Boolean = kernel.exists(dir)
 
   /** (source, lang, n_chars, __nt, __qu, __fp) — the x_data_card
     * per-doc enrichment: quality in exact integer millionths, md5 of
@@ -83,21 +91,17 @@ object CardStore {
            srcCol: String, langCol: String, textCol: String,
            nCharsCol: String, quality: Column => Column,
            accuracy: Int = 1 << 20, numBuckets: Int = 16): Unit =
-    WriterLease.withLease(dir, "cardstore-init") {
-      AdditiveLedger.requireFresh(dir, "card store",
-        extraPaths = Seq(s"${fpsDir(dir)}/_CURRENT"))
+    kernel.init(dir, extraPaths = Seq(s"${fpsDir(dir)}/_CURRENT")) { n =>
       val enriched = enrich(corpus, srcCol, langCol, textCol, nCharsCol,
         quality).localCheckpoint(true)
       val fps = enriched.select(col("source"), col("lang"), col("__fp"))
         .distinct().localCheckpoint(true)
       TableSink.overwrite(spark, fpsDir(dir),
-        fps.withColumn("__fb", lit("part_00000")).withColumn("__v", lit(0L)),
+        fps.withColumn("__fb", lit(n)).withColumn("__v", lit(0L)),
         FpKeys, numBuckets)
       val novel = fps.groupBy("source", "lang")
         .agg(count(lit(1)).as("n_unique_new"))
-      summarize(enriched, novel, accuracy)
-        .write.mode("overwrite").parquet(s"${statsDir(dir)}/part_00000")
-      AdditiveLedger.recordInit(dir, "part_00000")
+      kernel.write(summarize(enriched, novel, accuracy), dir, "stats", n)
     }
 
   /**
@@ -118,8 +122,8 @@ object CardStore {
              accuracy: Int = 1 << 20, name: Option[String] = None): Unit =
     WriterLease.withLease(dir, "cardstore-append") {
       require(exists(dir), s"no card store at '$dir' — run init first")
-      val n = name.getOrElse(AdditiveLedger.nextName(dir, Seq(statsDir(dir))))
-      if (!AdditiveLedger.isAbsorbed(dir, n)) {
+      val n = name.getOrElse(kernel.nextName(dir))
+      if (!kernel.isAbsorbed(dir, n)) {
         val enriched = enrich(batch, srcCol, langCol, textCol, nCharsCol,
           quality).localCheckpoint(true)
         val batchFps = enriched.select(col("source"), col("lang"), col("__fp"))
@@ -141,10 +145,8 @@ object CardStore {
         val novelCounts = prunedStored().filter(col("__fb") === n)
           .groupBy("source", "lang").agg(count(lit(1)).as("n_unique_new"))
           .localCheckpoint(true)
-        AdditiveLedger.mutateNamed(dir, Seq(statsDir(dir)), Some(n)) { nn =>
-          summarize(enriched, novelCounts, accuracy)
-            .write.mode("overwrite").parquet(s"${statsDir(dir)}/$nn")
-          DeltaParts.add(dir, nn)
+        kernel.mutate(dir, Some(n)) { nn =>
+          kernel.write(summarize(enriched, novelCounts, accuracy), dir, "stats", nn)
         }
       }
     }
@@ -161,9 +163,7 @@ object CardStore {
   def card(spark: SparkSession, dir: String,
            tag: Option[String] = None): DataFrame = {
     import graft.functions.QuantileSketch.{quantileSketchMerge, quantileSketchQuery}
-    val names = tag.fold(DeltaParts.list(dir))(t => DeltaParts.listAt(dir, t))
-    require(names.nonEmpty, s"no card store at '$dir' — run init first")
-    spark.read.parquet(names.map(p => s"${statsDir(dir)}/$p"): _*)
+    kernel.read(spark, dir, "stats", kernel.names(dir, tag))
       .groupBy("source", "lang").agg(
         sum(col("n_docs")).as("n_docs"),
         sum(col("n_tokens")).as("n_tokens"),
@@ -186,31 +186,13 @@ object CardStore {
       .orderBy("source", "lang")
   }
 
-  /** Pin the current stats parts under `tag`; [[card]] with the tag
-    * replays byte-identically across later appends and compactions.
-    * (The fingerprint relation needs no pin for the card — its counts
-    * are already folded into the pinned parts.) */
-  def snapshot(dir: String, tag: String): Seq[String] =
-    DeltaParts.snapshot(dir, tag)
-
-  def dropSnapshot(dir: String, tag: String): Unit =
-    DeltaParts.dropSnapshot(dir, tag)
-
-  /** Roll the card back to a tag. The fingerprint relation keeps rows
-    * absorbed after the tag — harmless for the restored card (counts
-    * come from the parts) but those fingerprints would keep POST-tag
-    * content deduplicated; a true content rollback re-inits, same as
-    * every insert-only store here. */
-  def restore(dir: String, tag: String): Unit =
-    DeltaParts.restore(dir, tag)
-
   /** Scheduled compaction: fold live parts to one row per group — all
     * five card statistics are mergeable (sums, GK merge, HLL union),
     * so the fold reads group-count-sized rows, never the corpus. */
   def compact(spark: SparkSession, dir: String): Unit = {
     import graft.functions.QuantileSketch.quantileSketchMerge
-    AdditiveLedger.compactWith(dir, Seq(statsDir(dir))) { (gen, old) =>
-      spark.read.parquet(old.map(p => s"${statsDir(dir)}/$p"): _*)
+    kernel.compact(dir) { (gen, old) =>
+      kernel.write(kernel.read(spark, dir, "stats", old)
         .groupBy("source", "lang").agg(
           sum(col("n_docs")).as("n_docs"),
           sum(col("n_tokens")).as("n_tokens"),
@@ -218,14 +200,12 @@ object CardStore {
           sum(col("sum_qu")).as("sum_qu"),
           sum(col("n_unique_new")).as("n_unique_new"),
           quantileSketchMerge(col("qsk")).as("qsk"),
-          hll_union_agg(col("hll")).as("hll"))
-        .write.mode("overwrite").parquet(s"${statsDir(dir)}/$gen")
+          hll_union_agg(col("hll")).as("hll")), dir, "stats", gen)
     }
   }
 
   /** Storage audit ([[graft.sources.StoreCheck]]): the stats ledger and
     * the fingerprint relation in one report. */
-  def fsck(spark: SparkSession, dir: String): DataFrame =
-    graft.sources.StoreCheck.deltaParts(spark, dir, Seq(statsDir(dir)))
-      .unionByName(graft.sources.StoreCheck.tableSink(spark, fpsDir(dir)))
+  override def fsck(spark: SparkSession, dir: String): DataFrame =
+    super.fsck(spark, dir).unionByName(StoreCheck.tableSink(spark, fpsDir(dir)))
 }

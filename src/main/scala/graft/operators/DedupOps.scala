@@ -564,6 +564,11 @@ object DedupOps {
    *         a pathological pair graph corrupt the dedup downstream.
    *         With path compression 20 rounds cover diameters near 2^20,
    *         so a real hit means the input, not the budget, is broken.
+   *         Only the distributed loop can throw: the driver path (edge
+   *         sets at or under [[CcDriverMaxEdgesConf]]) always converges
+   *         and ignores `maxIter`.
+   * @throws IllegalArgumentException if [[CcDriverMaxEdgesConf]] is not
+   *         a long in [0, Int.MaxValue - 1].
    *
    * Every round is lineage-TRUNCATED with an eager `localCheckpoint`
    * (not `cache`): iteration k's plan must not nest k copies of the
@@ -573,15 +578,6 @@ object DedupOps {
    * (id, label) rows, and the returned frame is likewise
    * checkpoint-backed, so consuming it never re-runs the loop.
    */
-  /** Session-conf override for the driver union-find cutoff of
-    * [[connectedComponents]] — edge sets at or under it (after the
-    * symmetric-distinct materialization) close on the driver in one
-    * collect instead of the iterative label loop. The default (~4M
-    * directed edges ≈ tens of MB of (long, long) rows) is the same
-    * driver-boundedness budget the broadcast-side choices use. */
-  val CcDriverMaxEdgesConf = "spark.graft.cc.driverMaxEdges"
-  private[graft] val DefaultCcDriverMaxEdges = 1L << 22
-
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
                           maxIter: Int = 20): DataFrame = {
     val edges = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
@@ -598,16 +594,18 @@ object DedupOps {
     val longIds = edges.schema.fields.forall(_.dataType == LongType)
     val maxDriverEdges = edges.sparkSession.conf
       .getOption(CcDriverMaxEdgesConf).map { raw =>
-        val n = try raw.toLong catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"$CcDriverMaxEdgesConf must be a non-negative long, got '$raw'")
-        }
-        require(n >= 0, s"$CcDriverMaxEdgesConf must be a non-negative long, got '$raw'")
+        // The bound is checked through limit(n + 1), an Int: above
+        // Int.MaxValue - 1 it would wrap or saturate and stop bounding
+        // the collect below, so such values are refused.
+        def bad = new IllegalArgumentException(
+          s"$CcDriverMaxEdgesConf must be a non-negative long at most " +
+            s"${Int.MaxValue - 1}, got '$raw'")
+        val n = try raw.toLong catch { case _: NumberFormatException => throw bad }
+        if (n < 0 || n > Int.MaxValue - 1) throw bad
         n
       }.getOrElse(DefaultCcDriverMaxEdges)
     if (longIds && maxDriverEdges > 0 &&
-        edges.limit((maxDriverEdges + 1).min(Int.MaxValue.toLong).toInt)
-          .count() <= maxDriverEdges) {
+        edges.limit(maxDriverEdges.toInt + 1).count() <= maxDriverEdges) {
       val parent = new java.util.HashMap[Long, Long]()
       def find(x0: Long): Long = {
         var x = x0
@@ -684,4 +682,14 @@ object DedupOps {
           "refusing to return partially-propagated (wrong) duplicate groups")
     labels
   }
+
+  /** Session-conf override for the driver union-find cutoff of
+    * [[connectedComponents]] — edge sets at or under it (after the
+    * symmetric-distinct materialization) close on the driver in one
+    * collect instead of the iterative label loop. The default (~4M
+    * directed edges ≈ tens of MB of (long, long) rows) is the same
+    * driver-boundedness budget the broadcast-side choices use. Values
+    * must lie in [0, Int.MaxValue - 1]; 0 forces the distributed loop. */
+  val CcDriverMaxEdgesConf = "spark.graft.cc.driverMaxEdges"
+  private[graft] val DefaultCcDriverMaxEdges = 1L << 22
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.sources.{AdditiveLedger, DeltaParts, StoreCheck}
+import graft.sources.AdditiveStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
  * The registry is ONE purely additive relation — (suite, g, c) where
  * `g` is a word n-gram md5 digest (never text — keeps every probe
  * exactly replayable by the SQL oracle) and `c` the digest's occurrence
- * count across the suite's docs — on the [[AdditiveLedger]], so the
+ * count across the suite's docs — on the [[AdditiveStore]] kernel, so the
  * whole [[LmStore]] maintenance story carries over verbatim:
  *  - [[register]] is an O(suite) count part, replay-idempotent by name
  *    at every crash point including after compaction;
@@ -32,21 +32,17 @@ import org.apache.spark.sql.functions._
  *  - [[snapshot]]/[[restore]] pin "the exact registry run X was
  *    screened against" for audit replay.
  *
- * The n-gram size is fixed at [[init]] and persisted (`_N`): a digest
+ * The n-gram size is fixed at [[init]] and persisted (`_meta`): a digest
  * registered under one n and probed under another silently never hits,
  * so the store refuses to exist without one recorded n.
  */
-object EvalStore {
+object EvalStore extends AdditiveStore.Lifecycle {
 
-  private def gramsDir(dir: String) = s"$dir/grams"
-  private def nPath(dir: String) = s"$dir/_N"
+  val kernel: AdditiveStore = AdditiveStore("eval registry", Seq("grams"),
+    Some(AdditiveStore.Meta(Seq("n"), stamped = false, check = "gram_size_pinned")))
 
   /** The n-gram size this registry was initialized with. */
-  def gramSize(dir: String): Int = {
-    require(graft.sources.StoreFs.get.exists(nPath(dir)),
-      s"no eval registry at '$dir' — run init first")
-    graft.sources.StoreFs.get.readString(nPath(dir)).trim.toInt
-  }
+  def gramSize(dir: String): Int = kernel.readMeta(dir)("n").toInt
 
   /** One suite's (suite, g, c) rows; sign −1 is the [[deregister]] part. */
   private def part(suiteName: String, suite: DataFrame, textCol: String,
@@ -56,18 +52,20 @@ object EvalStore {
       .groupBy("g").agg((count(lit(1)) * sign).as("c"))
       .select(lit(suiteName).as("suite"), col("g"), col("c"))
 
+  /** The additive fold of stored parts: counts sum per (suite, digest),
+    * net-zero digests drop. */
+  private def merged(parts: DataFrame): DataFrame =
+    parts.groupBy("suite", "g").agg(sum(col("c")).as("c")).filter(col("c") > 0)
+
   /** Create the registry with its first suite — run-once per dir (the
-    * [[AdditiveLedger.init]] refusal contract); `n` is pinned here for
+    * [[AdditiveStore.init]] refusal contract); `n` is pinned here for
     * the registry's whole life. */
   def init(spark: SparkSession, dir: String, suiteName: String,
            suite: DataFrame, textCol: String, n: Int = 8): Unit = {
     require(n >= 1, s"n-gram size must be >= 1, got $n")
     require(suiteName.nonEmpty, "suite name must be non-empty")
-    AdditiveLedger.init(dir, "eval registry", "part_00000",
-        extraPaths = Seq(nPath(dir))) { nm =>
-      graft.sources.StoreFs.get.writeAtomic(nPath(dir), s"$n\n")
-      part(suiteName, suite, textCol, n, sign = 1)
-        .write.mode("overwrite").parquet(s"${gramsDir(dir)}/$nm")
+    kernel.init(dir, metaValues = Seq("n" -> n.toString)) { nm =>
+      kernel.write(part(suiteName, suite, textCol, n, sign = 1), dir, "grams", nm)
     }
   }
 
@@ -78,7 +76,7 @@ object EvalStore {
   def register(spark: SparkSession, dir: String, suiteName: String,
                suite: DataFrame, textCol: String,
                name: Option[String] = None): Unit =
-    mutate(spark, dir, suiteName, suite, textCol, name, sign = 1)
+    mutate(dir, suiteName, suite, textCol, name, sign = 1)
 
   /** Retire a suite — the exact inverse of [[register]] as an O(suite)
     * negative part. CONTRACT: the caller replays exactly the registered
@@ -88,34 +86,28 @@ object EvalStore {
   def deregister(spark: SparkSession, dir: String, suiteName: String,
                  suite: DataFrame, textCol: String,
                  name: Option[String] = None): Unit = {
-    require(DeltaParts.list(dir).nonEmpty,
-      s"no eval registry at '$dir' — run init first")
-    mutate(spark, dir, suiteName, suite, textCol, name, sign = -1)
+    kernel.names(dir)
+    mutate(dir, suiteName, suite, textCol, name, sign = -1)
   }
 
-  private def mutate(spark: SparkSession, dir: String, suiteName: String,
-                     suite: DataFrame, textCol: String, name: Option[String],
-                     sign: Int): Unit = {
+  private def mutate(dir: String, suiteName: String, suite: DataFrame,
+                     textCol: String, name: Option[String], sign: Int): Unit = {
     require(suiteName.nonEmpty, "suite name must be non-empty")
     val n = gramSize(dir)
-    AdditiveLedger.mutateNamed(dir, Seq(gramsDir(dir)), name) { nm =>
-      part(suiteName, suite, textCol, n, sign)
-        .write.mode("overwrite").parquet(s"${gramsDir(dir)}/$nm")
-      DeltaParts.add(dir, nm)
+    kernel.mutate(dir, name) { nm =>
+      kernel.write(part(suiteName, suite, textCol, n, sign), dir, "grams", nm)
     }
   }
 
   /** The assembled (suite, g, c) registry — live state, or the
-    * [[snapshot]]-pinned state under `tag`. Suite-count-sized by
-    * construction (benchmarks, not corpora): safe to broadcast. */
+    * [[snapshot]]-pinned state under `tag` ("the exact benchmark set run
+    * X was screened against"). Suite-count-sized by construction
+    * (benchmarks, not corpora): safe to broadcast. */
   def registry(spark: SparkSession, dir: String,
                tag: Option[String] = None): DataFrame = {
-    val names = tag.fold(DeltaParts.list(dir))(t => DeltaParts.listAt(dir, t))
-    require(names.nonEmpty, s"no eval registry at '$dir' — run init first")
-    val parts = spark.read.parquet(names.map(p => s"${gramsDir(dir)}/$p"): _*)
-    if (names.size == 1) parts
-    else parts.groupBy("suite", "g").agg(sum(col("c")).as("c"))
-      .filter(col("c") > 0)
+    val names = kernel.names(dir, tag)
+    val parts = kernel.read(spark, dir, "grams", names)
+    if (names.size == 1) parts else merged(parts)
   }
 
   /** O(batch) decontamination of a batch against every live suite (or a
@@ -171,30 +163,8 @@ object EvalStore {
   /** Fold the live parts to one generation (exact integer sums,
     * net-zero digests gone physically). */
   def compact(spark: SparkSession, dir: String): Unit =
-    AdditiveLedger.compactWith(dir, Seq(gramsDir(dir))) { (gen, old) =>
-      val merged = spark.read.parquet(old.map(p => s"${gramsDir(dir)}/$p"): _*)
-        .groupBy("suite", "g").agg(sum(col("c")).as("c"))
-        .filter(col("c") > 0)
-      merged.localCheckpoint(true)
-        .write.mode("overwrite").parquet(s"${gramsDir(dir)}/$gen")
+    kernel.compact(dir) { (gen, old) =>
+      kernel.write(merged(kernel.read(spark, dir, "grams", old)).localCheckpoint(true),
+        dir, "grams", gen)
     }
-
-  /** Pin the current registry under `tag` ("the exact benchmark set run
-    * X was screened against"); [[probe]] with the tag replays it. */
-  def snapshot(dir: String, tag: String): Seq[String] = DeltaParts.snapshot(dir, tag)
-
-  def dropSnapshot(dir: String, tag: String): Unit = DeltaParts.dropSnapshot(dir, tag)
-
-  /** Roll the live registry back to a tag (no data movement; part names
-    * stay write-once across restores). */
-  def restore(dir: String, tag: String): Unit = DeltaParts.restore(dir, tag)
-
-  /** Storage audit — the additive-ledger fsck plus the `_N` pin. */
-  def check(spark: SparkSession, dir: String): DataFrame = {
-    val base = StoreCheck.deltaParts(spark, dir, Seq(gramsDir(dir)))
-    val nOk = graft.sources.StoreFs.get.exists(nPath(dir)) &&
-      scala.util.Try(gramSize(dir)).toOption.exists(_ >= 1)
-    base.unionByName(StoreCheck.row(spark, dir, "gram_size_pinned", nOk,
-      if (nOk) s"n=${gramSize(dir)}" else s"missing/invalid ${nPath(dir)}"))
-  }
 }

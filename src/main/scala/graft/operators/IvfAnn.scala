@@ -31,7 +31,14 @@ object IvfAnn {
     * [[graft.functions.CentroidKernels]] argmax replays the former
     * crossJoin → argmax-aggregation → join-back plan's cell ids
     * bit-identically (same cosine kernel, same ordering, lowest-id
-    * ties) with ZERO exchanges instead of three-plus. */
+    * ties) with ZERO exchanges instead of three-plus. `cell` is
+    * appended as the last column.
+    *
+    * Edge semantics: a NULL vector gets a NULL cell. A vector holding a
+    * NaN still gets a cell: its similarity is NaN against every
+    * non-zero centroid, NaN orders greatest under Spark's double
+    * ordering, so it lands in the lowest-id such cell (the old
+    * thresholded aggregation form left both cases unassigned, -1). */
   def assignCells(corpus: DataFrame, idCol: String, vecCol: String,
                   centroids: DataFrame): DataFrame = {
     val cents = centroidMatrix(centroids)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.sources.DeltaParts
+import graft.sources.AdditiveStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -24,9 +24,9 @@ import org.apache.spark.sql.functions._
  * takedown inverse (exact negative counts, the Admission.unadmit
  * idiom).
  */
-object LineStore {
+object LineStore extends AdditiveStore.Lifecycle {
 
-  private def linesDir(dir: String) = s"$dir/lines"
+  val kernel: AdditiveStore = AdditiveStore("line store", Seq("lines"))
 
   /** (digest, df) of one document set, `sign` = −1 for a [[remove]]. */
   private def parts(docs: DataFrame, idCol: String, textCol: String,
@@ -35,15 +35,9 @@ object LineStore {
       .groupBy("__d").agg((count(lit(1)) * sign).as("df"))
       .select(col("__d").as("digest"), col("df"))
 
-  private def writePart(dir: String, name: String, rel: DataFrame,
-                        ledger: Boolean = true): Unit = {
-    rel.write.mode("overwrite").parquet(s"${linesDir(dir)}/$name")
-    if (ledger) DeltaParts.add(dir, name)
-  }
-
   private def merged(spark: SparkSession, dir: String,
                      names: Seq[String]): DataFrame = {
-    val all = spark.read.parquet(names.map(p => s"${linesDir(dir)}/$p"): _*)
+    val all = kernel.read(spark, dir, "lines", names)
     if (names.size == 1) all
     else all.groupBy("digest").agg(sum(col("df")).as("df")).filter(col("df") > 0)
   }
@@ -51,50 +45,40 @@ object LineStore {
   /** O(corpus), once; refuses a used dir (the [[LmStore.init]] contract). */
   def init(spark: SparkSession, dir: String, corpus: DataFrame,
            idCol: String, textCol: String): Unit =
-    graft.sources.AdditiveLedger.init(dir, "line store", "part_00000") { n =>
-      writePart(dir, n, parts(corpus, idCol, textCol, 1), ledger = false)
+    kernel.init(dir) { n =>
+      kernel.write(parts(corpus, idCol, textCol, 1), dir, "lines", n)
     }
 
   /** O(batch) fold of NEW docs (disjoint ids); replay-idempotent by
     * `name` at every crash point, compaction included. */
   def append(spark: SparkSession, dir: String, newDocs: DataFrame,
              idCol: String, textCol: String, name: Option[String] = None): Unit =
-    mutate(spark, dir, newDocs, idCol, textCol, name, sign = 1)
+    mutate(dir, newDocs, idCol, textCol, name, sign = 1)
 
   /** Exact takedown inverse of a previous append (the caller replays
     * the removed docs' text — the [[LmStore.remove]] contract). */
   def remove(spark: SparkSession, dir: String, removedDocs: DataFrame,
              idCol: String, textCol: String, name: Option[String] = None): Unit = {
-    require(DeltaParts.list(dir).nonEmpty, s"no line store at '$dir' — run init first")
-    mutate(spark, dir, removedDocs, idCol, textCol, name, sign = -1)
+    kernel.names(dir)
+    mutate(dir, removedDocs, idCol, textCol, name, sign = -1)
   }
 
-  private def mutate(spark: SparkSession, dir: String, docs: DataFrame,
-                     idCol: String, textCol: String, name: Option[String],
-                     sign: Int): Unit =
-    graft.sources.AdditiveLedger.mutateNamed(dir, Seq(linesDir(dir)), name) { n =>
-      writePart(dir, n, parts(docs, idCol, textCol, sign))
+  private def mutate(dir: String, docs: DataFrame, idCol: String,
+                     textCol: String, name: Option[String], sign: Int): Unit =
+    kernel.mutate(dir, name) { n =>
+      kernel.write(parts(docs, idCol, textCol, sign), dir, "lines", n)
     }
 
   def compact(spark: SparkSession, dir: String): Unit =
-    graft.sources.AdditiveLedger.compactWith(dir, Seq(linesDir(dir))) { (gen, old) =>
-      writePart(dir, gen,
-        merged(spark, dir, old).localCheckpoint(true),
-        ledger = false)
+    kernel.compact(dir) { (gen, old) =>
+      kernel.write(merged(spark, dir, old).localCheckpoint(true), dir, "lines", gen)
     }
 
   /** The assembled (digest, df) relation; with `tag`, the snapshot-
     * pinned state. */
   def readCounts(spark: SparkSession, dir: String,
-                 tag: Option[String] = None): DataFrame = {
-    val names = tag.fold(DeltaParts.list(dir))(t => DeltaParts.listAt(dir, t))
-    require(names.nonEmpty, s"no line store at '$dir' — run init first")
-    merged(spark, dir, names)
-  }
-
-  def snapshot(dir: String, tag: String): Seq[String] = DeltaParts.snapshot(dir, tag)
-  def dropSnapshot(dir: String, tag: String): Unit = DeltaParts.dropSnapshot(dir, tag)
-  def restore(dir: String, tag: String): Unit = DeltaParts.restore(dir, tag)
+                 tag: Option[String] = None): DataFrame =
+    merged(spark, dir, kernel.names(dir, tag))
 
   /**
    * Admission-time boilerplate scrub of a batch against the standing

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.sources.DeltaParts
+import graft.sources.AdditiveStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -35,11 +35,9 @@ import org.apache.spark.sql.functions._
  * every crash point, including a replay after a compaction folded the
  * named part.
  */
-object LmStore {
+object LmStore extends AdditiveStore.Lifecycle {
 
-  private def uniDir(dir: String) = s"$dir/unigrams"
-  private def biDir(dir: String) = s"$dir/bigrams"
-  private def relationRoots(dir: String) = Seq(uniDir(dir), biDir(dir))
+  val kernel: AdditiveStore = AdditiveStore("LM store", Seq("unigrams", "bigrams"))
 
   /** The two additive relations of one document set, with `sign` = −1
     * producing the exact negative part a [[remove]] writes. */
@@ -53,10 +51,9 @@ object LmStore {
   }
 
   private def writePart(dir: String, name: String, uni: DataFrame,
-                        bi: DataFrame, ledger: Boolean = true): Unit = {
-    uni.write.mode("overwrite").parquet(s"${uniDir(dir)}/$name")
-    bi.write.mode("overwrite").parquet(s"${biDir(dir)}/$name")
-    if (ledger) DeltaParts.add(dir, name)
+                        bi: DataFrame): Unit = {
+    kernel.write(uni, dir, "unigrams", name)
+    kernel.write(bi, dir, "bigrams", name)
   }
 
   /** Additive merge of the live parts — ONE definition shared by
@@ -66,8 +63,8 @@ object LmStore {
     * generation — already grouped and positive — so the fold is free. */
   private def merged(spark: SparkSession, dir: String, names: Seq[String])
       : (DataFrame, DataFrame) = {
-    val uniParts = spark.read.parquet(names.map(p => s"${uniDir(dir)}/$p"): _*)
-    val biParts = spark.read.parquet(names.map(p => s"${biDir(dir)}/$p"): _*)
+    val uniParts = kernel.read(spark, dir, "unigrams", names)
+    val biParts = kernel.read(spark, dir, "bigrams", names)
     if (names.size == 1) (uniParts, biParts)
     else (
       uniParts.groupBy("token").agg(sum(col("c")).as("c")).filter(col("c") > 0),
@@ -80,9 +77,9 @@ object LmStore {
     * survives, silently no-opping a later replayed append. */
   def init(spark: SparkSession, dir: String, corpus: DataFrame,
            textCol: String): Unit =
-    graft.sources.AdditiveLedger.init(dir, "LM store", "part_00000") { n =>
+    kernel.init(dir) { n =>
       val (u, b) = parts(corpus, textCol, sign = 1)
-      writePart(dir, n, u, b, ledger = false)
+      writePart(dir, n, u, b)
     }
 
   /** Fold a batch of new reference documents into the model — O(batch),
@@ -92,7 +89,7 @@ object LmStore {
     * `_absorbed` ledger survives compaction). */
   def append(spark: SparkSession, dir: String, newDocs: DataFrame,
              textCol: String, name: Option[String] = None): Unit =
-    mutate(spark, dir, newDocs, textCol, name, sign = 1)
+    mutate(dir, newDocs, textCol, name, sign = 1)
 
   /** Take documents OUT of the reference model — the takedown inverse
     * of [[append]], as an O(batch) exact negative count part (no corpus
@@ -106,13 +103,13 @@ object LmStore {
     * poisoning it. */
   def remove(spark: SparkSession, dir: String, removedDocs: DataFrame,
              textCol: String, name: Option[String] = None): Unit = {
-    require(DeltaParts.list(dir).nonEmpty, s"no LM store at '$dir' — run init first")
-    mutate(spark, dir, removedDocs, textCol, name, sign = -1)
+    kernel.names(dir)
+    mutate(dir, removedDocs, textCol, name, sign = -1)
   }
 
-  private def mutate(spark: SparkSession, dir: String, docs: DataFrame,
-                     textCol: String, name: Option[String], sign: Int): Unit =
-    graft.sources.AdditiveLedger.mutateNamed(dir, relationRoots(dir), name) { n =>
+  private def mutate(dir: String, docs: DataFrame, textCol: String,
+                     name: Option[String], sign: Int): Unit =
+    kernel.mutate(dir, name) { n =>
       val (u, b) = parts(docs, textCol, sign)
       writePart(dir, n, u, b)
     }
@@ -121,33 +118,18 @@ object LmStore {
     * zero/negative keys gone physically). Superseded parts stay one
     * cycle for in-flight readers; snapshot-pinned parts never sweep. */
   def compact(spark: SparkSession, dir: String): Unit =
-    graft.sources.AdditiveLedger.compactWith(dir, relationRoots(dir)) { (gen, old) =>
+    kernel.compact(dir) { (gen, old) =>
       val (u, b) = merged(spark, dir, old)
-      writePart(dir, gen, u.localCheckpoint(true), b.localCheckpoint(true),
-        ledger = false)
+      writePart(dir, gen, u.localCheckpoint(true), b.localCheckpoint(true))
     }
 
   /** The assembled models — exactly ([[CurationOps.unigramModel]],
     * [[CurationOps.bigramModel]]) over the net document multiset, ready
     * for [[CurationOps.bigramCrossEntropy]] (both broadcast there).
     * With `tag`, assembles the [[snapshot]]-pinned parts — time travel
-    * over the reference model. */
+    * over the reference model ("the exact reference LM run X scored
+    * with"). */
   def readModels(spark: SparkSession, dir: String,
-                 tag: Option[String] = None): (DataFrame, DataFrame) = {
-    val names = tag.fold(DeltaParts.list(dir))(t => DeltaParts.listAt(dir, t))
-    require(names.nonEmpty, s"no LM store at '$dir' — run init first")
-    merged(spark, dir, names)
-  }
-
-  /** Pin the current model state under `tag` ("the exact reference LM
-    * run X scored with"); sweeps respect pins, [[readModels]] with the
-    * tag replays byte-identically. */
-  def snapshot(dir: String, tag: String): Seq[String] = DeltaParts.snapshot(dir, tag)
-
-  def dropSnapshot(dir: String, tag: String): Unit = DeltaParts.dropSnapshot(dir, tag)
-
-  /** Roll the live model back to a tag (no data movement). Part names
-    * stay write-once across restores — the [[Bm25Store.restore]]
-    * monotonicity contract that keeps pending replays safe. */
-  def restore(dir: String, tag: String): Unit = DeltaParts.restore(dir, tag)
+                 tag: Option[String] = None): (DataFrame, DataFrame) =
+    merged(spark, dir, kernel.names(dir, tag))
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.sources.{AdditiveLedger, DeltaParts}
+import graft.sources.{AdditiveStore, BucketedParts}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -46,11 +46,10 @@ import org.apache.spark.sql.functions._
  * result tail [[InfiniGram.assemble]] itself; the store adds only the
  * ledger fold between them.
  */
-object NgramStore {
+object NgramStore extends AdditiveStore.Lifecycle {
 
-  private def gramsDir(dir: String) = s"$dir/grams"
-  private def roots(dir: String) = Seq(gramsDir(dir))
-  private def metaPath(dir: String) = s"$dir/_meta"
+  val kernel: AdditiveStore = AdditiveStore("n-gram store", Seq("grams"),
+    Some(AdditiveStore.Meta(Seq("maxN", "buckets"))))
 
   /** The width bound the store was built at (probes run at it — mixing
     * widths would silently under-match, so it is not a probe param). */
@@ -59,13 +58,12 @@ object NgramStore {
   def numBuckets(dir: String): Int = meta(dir)._2
 
   private def meta(dir: String): (Int, Int) = {
-    val kv = graft.sources.BucketedParts.readMeta(metaPath(dir), "n-gram store")
-    graft.sources.BucketedParts.requireDigestMatch(kv, "n-gram store", dir)
+    val kv = kernel.readMeta(dir)
     (kv("maxN").toInt, kv("buckets").toInt)
   }
 
   private def bucketOf(h1: Column, nb: Int): Column =
-    graft.sources.BucketedParts.bucketOf(h1, nb)
+    BucketedParts.bucketOf(h1, nb)
 
   /** The signed count part of one document set: ONE aggregation over
     * the shared window kernel — (h1, h2, next, c·sign, __b), `next`
@@ -79,18 +77,13 @@ object NgramStore {
       .groupBy(col("h1"), col("h2"), col("next"), col("__b"))
       .agg((count(lit(1)) * sign).as("c"))
 
-  private def writeBucketed(path: String, df: DataFrame, nb: Int): Unit =
-    graft.sources.BucketedParts.writeBucketed(path, df, nb)
+  private def writeGrams(dir: String, name: String, df: DataFrame, nb: Int): Unit =
+    BucketedParts.writeBucketed(kernel.path(dir, "grams", name), df, nb)
 
-  private def readParts(spark: SparkSession, root: String,
-                        names: Seq[String]): DataFrame =
-    graft.sources.BucketedParts.readParts(spark, root, names)
-
-  private def liveNames(dir: String, tag: Option[String]): Seq[String] = {
-    val names = tag.fold(DeltaParts.list(dir))(t => DeltaParts.listAt(dir, t))
-    require(names.nonEmpty, s"no n-gram store at '$dir' — run init first")
-    names
-  }
+  /** The additive fold: counts sum per (gram, next), net-≤0 keys drop. */
+  private def folded(grams: DataFrame): DataFrame =
+    grams.groupBy(col("h1"), col("h2"), col("next"), col("__b"))
+      .agg(sum(col("c")).as("c")).filter(col("c") > 0)
 
   /** O(corpus), once; REFUSES a previously-used dir (the ledger's
     * run-once contract — a reset parts dir under a surviving
@@ -99,16 +92,8 @@ object NgramStore {
            textCol: String, maxN: Int = 8, numBuckets: Int = 64): Unit = {
     require(maxN >= 1, s"maxN must be >= 1: $maxN")
     require(numBuckets >= 1, s"numBuckets must be >= 1: $numBuckets")
-    AdditiveLedger.init(dir, "n-gram store", "part_00000",
-        extraPaths = Seq(metaPath(dir))) { n =>
-      writeBucketed(s"${gramsDir(dir)}/$n",
-        partOf(corpus, textCol, maxN, numBuckets, sign = 1), numBuckets)
-      // Meta lands LAST inside the callback: a crash before this point
-      // leaves neither _PARTS nor _meta, so a retry re-runs clean.
-      graft.sources.BucketedParts.writeMeta(metaPath(dir),
-        Seq("maxN" -> maxN.toString, "buckets" -> numBuckets.toString,
-          graft.sources.BucketedParts.digestStamp))
-      ()
+    kernel.init(dir, Seq("maxN" -> maxN.toString, "buckets" -> numBuckets.toString)) { n =>
+      writeGrams(dir, n, partOf(corpus, textCol, maxN, numBuckets, sign = 1), numBuckets)
     }
   }
 
@@ -116,7 +101,7 @@ object NgramStore {
     * read; replay-idempotent by `name` at every crash point. */
   def append(spark: SparkSession, dir: String, newDocs: DataFrame,
              textCol: String, name: Option[String] = None): Unit =
-    mutate(spark, dir, newDocs, textCol, name, sign = 1)
+    mutate(dir, newDocs, textCol, name, sign = 1)
 
   /** Takedown: the EXACT negative count part (no rescan, no rebuild).
     * CONTRACT: the caller replays exactly the text of a
@@ -125,16 +110,15 @@ object NgramStore {
     * drop from reads rather than poisoning them. */
   def remove(spark: SparkSession, dir: String, removedDocs: DataFrame,
              textCol: String, name: Option[String] = None): Unit = {
-    liveNames(dir, None)
-    mutate(spark, dir, removedDocs, textCol, name, sign = -1)
+    kernel.names(dir)
+    mutate(dir, removedDocs, textCol, name, sign = -1)
   }
 
-  private def mutate(spark: SparkSession, dir: String, docs: DataFrame,
-                     textCol: String, name: Option[String], sign: Int): Unit = {
+  private def mutate(dir: String, docs: DataFrame, textCol: String,
+                     name: Option[String], sign: Int): Unit = {
     val (mn, nb) = meta(dir)
-    AdditiveLedger.mutateNamed(dir, roots(dir), name) { n =>
-      writeBucketed(s"${gramsDir(dir)}/$n", partOf(docs, textCol, mn, nb, sign), nb)
-      DeltaParts.add(dir, n)
+    kernel.mutate(dir, name) { n =>
+      writeGrams(dir, n, partOf(docs, textCol, mn, nb, sign), nb)
     }
   }
 
@@ -144,39 +128,20 @@ object NgramStore {
   def readGrams(spark: SparkSession, dir: String,
                 tag: Option[String] = None,
                 bucketFilter: Option[Seq[Int]] = None): DataFrame = {
-    val names = liveNames(dir, tag)
-    val all0 = readParts(spark, gramsDir(dir), names)
-    val all = bucketFilter.fold(all0)(bs =>
-      all0.filter(graft.sources.BucketedParts.inBuckets(bs)))
-    if (names.size == 1) all
-    else all.groupBy(col("h1"), col("h2"), col("next"), col("__b"))
-      .agg(sum(col("c")).as("c")).filter(col("c") > 0)
+    val names = kernel.names(dir, tag)
+    val all0 = kernel.readEach(spark, dir, "grams", names)
+    val all = bucketFilter.fold(all0)(bs => all0.filter(BucketedParts.inBuckets(bs)))
+    if (names.size == 1) all else folded(all)
   }
 
   /** Fold the live parts to one generation (exact integer sums, net-≤0
     * keys gone physically); superseded parts stay one cycle for
     * in-flight readers, snapshot-pinned parts never sweep. */
   def compact(spark: SparkSession, dir: String): Unit =
-    AdditiveLedger.compactWith(dir, roots(dir)) { (gen, old) =>
-      writeBucketed(s"${gramsDir(dir)}/$gen",
-        readParts(spark, gramsDir(dir), old)
-          .groupBy(col("h1"), col("h2"), col("next"), col("__b"))
-          .agg(sum(col("c")).as("c")).filter(col("c") > 0), meta(dir)._2)
+    kernel.compact(dir) { (gen, old) =>
+      writeGrams(dir, gen, folded(kernel.readEach(spark, dir, "grams", old)),
+        meta(dir)._2)
     }
-
-  def snapshot(dir: String, tag: String): Seq[String] = DeltaParts.snapshot(dir, tag)
-  def dropSnapshot(dir: String, tag: String): Unit = DeltaParts.dropSnapshot(dir, tag)
-  def restore(dir: String, tag: String): Unit = DeltaParts.restore(dir, tag)
-
-  /** Storage audit: the grams ledger plus the meta pin. */
-  def fsck(spark: SparkSession, dir: String): DataFrame = {
-    val metaOk = graft.sources.StoreFs.get.exists(metaPath(dir))
-    graft.sources.StoreCheck.deltaParts(spark, dir, roots(dir))
-      .unionByName(graft.sources.StoreCheck.row(spark, dir, "meta_resolves",
-        metaOk,
-        if (metaOk) { val (mn, nb) = meta(dir); s"maxN=$mn buckets=$nb" }
-        else s"missing ${metaPath(dir)} — probes cannot resolve maxN"))
-  }
 
   /**
    * The stored probe — answers identically to

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.sources.{AdditiveLedger, BucketedParts, DeltaParts}
+import graft.sources.{AdditiveStore, BucketedParts}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -40,7 +40,7 @@ import org.apache.spark.sql.functions._
  * equi-join on (id, exact position), output bounded by the smaller
  * side — never a pair fan-out.
  *
- * Storage shape (the [[graft.sources.AdditiveLedger]] family):
+ * Storage shape (the [[graft.sources.AdditiveStore]] family):
  *
  *   dir/win/<part>/__a=A/__b=K/…  (id, i, h1, h2) — width-2^a windows,
  *                                  Hive-partitioned by (level, digest
@@ -76,12 +76,10 @@ import org.apache.spark.sql.functions._
  * scale by `x_sa_longest_match_stored`). Query ids must be unique
  * (the in-memory form's own contract).
  */
-object SaStore {
+object SaStore extends AdditiveStore.Lifecycle {
 
-  private def winDir(dir: String) = s"$dir/win"
-  private def tombsDir(dir: String) = s"$dir/tombs"
-  private def roots(dir: String) = Seq(winDir(dir), tombsDir(dir))
-  private def metaPath(dir: String) = s"$dir/_meta"
+  val kernel: AdditiveStore = AdditiveStore("suffix-array store",
+    Seq("win", "tombs"), Some(AdditiveStore.Meta(Seq("maxLen", "buckets"))))
 
   /** The length budget the store was built at: the longest certifiable
     * match, = 2^(levels+1) for top level index `levels`. */
@@ -90,8 +88,7 @@ object SaStore {
   def numBuckets(dir: String): Int = meta(dir)._2
 
   private def meta(dir: String): (Int, Int) = {
-    val kv = BucketedParts.readMeta(metaPath(dir), "suffix-array store")
-    BucketedParts.requireDigestMatch(kv, "suffix-array store", dir)
+    val kv = kernel.readMeta(dir)
     (kv("maxLen").toInt, kv("buckets").toInt)
   }
 
@@ -143,18 +140,16 @@ object SaStore {
     spark.range(0).select(col("id"), lit(0).as("i"),
       lit(0L).as("h1"), lit(0L).as("h2"), lit(0).as("__a"), lit(0).as("__b"))
 
-  private def writeWin(path: String, df: DataFrame, topA: Int, nb: Int): Unit =
-    BucketedParts.writePartitioned(path, df, Seq("__a", "__b"), (topA + 1) * nb)
-
-  private def readParts(spark: SparkSession, root: String,
-                        names: Seq[String]): DataFrame =
-    BucketedParts.readParts(spark, root, names)
-
-  private def liveNames(dir: String, tag: Option[String]): Seq[String] = {
-    val names = tag.fold(DeltaParts.list(dir))(t => DeltaParts.listAt(dir, t))
-    require(names.nonEmpty, s"no suffix-array store at '$dir' — run init first")
-    names
+  /** One part's files: its level windows and its tombstone ids. */
+  private def writePart(dir: String, name: String, win: DataFrame,
+                        tombs: DataFrame, topA: Int, nb: Int): Unit = {
+    BucketedParts.writePartitioned(kernel.path(dir, "win", name), win,
+      Seq("__a", "__b"), (topA + 1) * nb)
+    kernel.write(tombs, dir, "tombs", name)
   }
+
+  private def noTombs(spark: SparkSession): DataFrame =
+    emptyWin(spark).select(col("id")).limit(0)
 
   /** Every [[append]] admission check, with NO mutation — callable as
     * a PRE-flight by composite stores ([[graft.pipelines.Admission]]'s
@@ -167,7 +162,7 @@ object SaStore {
     val budget = meta(dir)._1
     requireWithinBudget(batch, textCol, budget, dir)
     requireLongIds(batch, idCol)
-    val tombs = readParts(spark, tombsDir(dir), liveNames(dir, None)).distinct()
+    val tombs = kernel.readEach(spark, dir, "tombs", kernel.names(dir)).distinct()
     val clash = tombs
       .join(broadcast(batch.select(col(idCol).cast("long").as("id")).distinct()),
         Seq("id"), "left_semi")
@@ -205,18 +200,10 @@ object SaStore {
       .map(_.asInstanceOf[Int]).getOrElse(0)
     val budget = pow2ceil(math.max(2, math.max(maxLen, longest)))
     val topA = topLevel(budget)
-    AdditiveLedger.init(dir, "suffix-array store", "part_00000",
-        extraPaths = Seq(metaPath(dir))) { n =>
-      writeWin(s"${winDir(dir)}/$n",
-        windowsOf(corpus, idCol, textCol, topA, numBuckets), topA, numBuckets)
-      emptyWin(spark).select(col("id")).limit(0)
-        .write.mode("overwrite").parquet(s"${tombsDir(dir)}/$n")
-      // Meta lands LAST inside the callback: a crash before this point
-      // leaves neither _PARTS nor _meta, so a retry re-runs clean.
-      BucketedParts.writeMeta(metaPath(dir),
-        Seq("maxLen" -> budget.toString, "buckets" -> numBuckets.toString,
-          BucketedParts.digestStamp))
-      ()
+    kernel.init(dir, Seq("maxLen" -> budget.toString,
+        "buckets" -> numBuckets.toString)) { n =>
+      writePart(dir, n, windowsOf(corpus, idCol, textCol, topA, numBuckets),
+        noTombs(spark), topA, numBuckets)
     }
   }
 
@@ -232,16 +219,13 @@ object SaStore {
     // every crash point — short-circuit before the admission checks,
     // which legitimately fail for state that changed SINCE completion
     // (e.g. the appended ids were tombstoned later).
-    if (name.exists(n => AdditiveLedger.isAbsorbed(dir, n))) return
+    if (name.exists(n => kernel.isAbsorbed(dir, n))) return
     requireAppendable(spark, dir, batch, idCol, textCol)
     val (budget, nb) = meta(dir)
     val topA = topLevel(budget)
-    AdditiveLedger.mutateNamed(dir, roots(dir), name) { n =>
-      writeWin(s"${winDir(dir)}/$n",
-        windowsOf(batch, idCol, textCol, topA, nb), topA, nb)
-      emptyWin(spark).select(col("id")).limit(0)
-        .write.mode("overwrite").parquet(s"${tombsDir(dir)}/$n")
-      DeltaParts.add(dir, n)
+    kernel.mutate(dir, name) { n =>
+      writePart(dir, n, windowsOf(batch, idCol, textCol, topA, nb),
+        noTombs(spark), topA, nb)
     }
   }
 
@@ -251,14 +235,12 @@ object SaStore {
   def remove(spark: SparkSession, dir: String, removedIds: DataFrame,
              idCol: String, name: Option[String] = None): Unit = {
     requireLongIds(removedIds, idCol)
-    liveNames(dir, None) // loud on an uninitialized store
+    kernel.names(dir) // loud on an uninitialized store
     val (budget, nb) = meta(dir)
     val topA = topLevel(budget)
-    AdditiveLedger.mutateNamed(dir, roots(dir), name) { n =>
-      writeWin(s"${winDir(dir)}/$n", emptyWin(spark), topA, nb)
-      removedIds.select(col(idCol).cast("long").as("id")).distinct()
-        .write.mode("overwrite").parquet(s"${tombsDir(dir)}/$n")
-      DeltaParts.add(dir, n)
+    kernel.mutate(dir, name) { n =>
+      writePart(dir, n, emptyWin(spark),
+        removedIds.select(col(idCol).cast("long").as("id")).distinct(), topA, nb)
     }
   }
 
@@ -270,45 +252,29 @@ object SaStore {
   def readWindows(spark: SparkSession, dir: String,
                   tag: Option[String] = None,
                   levelBuckets: Option[Map[Int, Seq[Int]]] = None): DataFrame = {
-    val names = liveNames(dir, tag)
-    val wins0 = readParts(spark, winDir(dir), names)
+    val names = kernel.names(dir, tag)
+    val wins0 = kernel.readEach(spark, dir, "win", names)
     val wins = levelBuckets.fold(wins0) { lb =>
       val f = lb.toSeq.sortBy(_._1).map { case (a, bs) =>
         col("__a") === a && BucketedParts.inBuckets(bs)
       }.reduceOption(_ || _).getOrElse(lit(false))
       wins0.filter(f)
     }
-    val tombs = readParts(spark, tombsDir(dir), names).distinct()
+    val tombs = kernel.readEach(spark, dir, "tombs", names).distinct()
     wins.join(tombs, Seq("id"), "left_anti")
   }
 
   /** Scheduled fold: tombstoned rows dropped physically, parts merged
     * to one generation, single pruned-scan reads restored. */
   def compact(spark: SparkSession, dir: String): Unit =
-    AdditiveLedger.compactWith(dir, roots(dir)) { (gen, old) =>
+    kernel.compact(dir) { (gen, old) =>
       val (budget, nb) = meta(dir)
-      val topA = topLevel(budget)
-      val tombs = readParts(spark, tombsDir(dir), old).distinct()
+      val tombs = kernel.readEach(spark, dir, "tombs", old).distinct()
         .localCheckpoint(true)
-      writeWin(s"${winDir(dir)}/$gen",
-        readParts(spark, winDir(dir), old).join(tombs, Seq("id"), "left_anti"),
-        topA, nb)
-      tombs.limit(0).write.mode("overwrite").parquet(s"${tombsDir(dir)}/$gen")
+      writePart(dir, gen,
+        kernel.readEach(spark, dir, "win", old).join(tombs, Seq("id"), "left_anti"),
+        tombs.limit(0), topLevel(budget), nb)
     }
-
-  def snapshot(dir: String, tag: String): Seq[String] = DeltaParts.snapshot(dir, tag)
-  def dropSnapshot(dir: String, tag: String): Unit = DeltaParts.dropSnapshot(dir, tag)
-  def restore(dir: String, tag: String): Unit = DeltaParts.restore(dir, tag)
-
-  /** Storage audit: the two-relation ledger plus the meta pin. */
-  def fsck(spark: SparkSession, dir: String): DataFrame = {
-    val metaOk = graft.sources.StoreFs.get.exists(metaPath(dir))
-    graft.sources.StoreCheck.deltaParts(spark, dir, roots(dir))
-      .unionByName(graft.sources.StoreCheck.row(spark, dir, "meta_resolves",
-        metaOk,
-        if (metaOk) { val (m, nb) = meta(dir); s"maxLen=$m buckets=$nb" }
-        else s"missing ${metaPath(dir)} — probes cannot resolve the budget"))
-  }
 
   /** Occurrence test for a batch of anchored (q_id, pos, L) candidates
     * — the probe kernel shared by the whole-suffix probe (pos = the

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.sources.{AdditiveLedger, DeltaParts}
+import graft.sources.{AdditiveStore, BucketedParts}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -33,7 +33,7 @@ import org.apache.spark.sql.functions._
  * the BATCH side — every batch-touching pair has a batch site by
  * construction, and an exact match's text is identical at both sites.
  *
- * Storage shape (the [[graft.sources.AdditiveLedger]] family): three
+ * Storage shape (the [[graft.sources.AdditiveStore]] family): three
  * relations under ONE parts ledger —
  *
  *   dir/windows/<part>/__b=K/…   (id, i, h1, h2), bucket-partitioned
@@ -62,14 +62,10 @@ import org.apache.spark.sql.functions._
  * incremental contract; a tombstoned id cannot be re-appended before a
  * [[compact]], enforced loudly).
  */
-object SpanPosStore {
+object SpanPosStore extends AdditiveStore.Lifecycle {
 
-  private def windowsDir(dir: String) = s"$dir/windows"
-  private def countsDir(dir: String) = s"$dir/counts"
-  private def tombsDir(dir: String) = s"$dir/tombs"
-  private def roots(dir: String) =
-    Seq(windowsDir(dir), countsDir(dir), tombsDir(dir))
-  private def metaPath(dir: String) = s"$dir/_meta"
+  val kernel: AdditiveStore = AdditiveStore("span position store",
+    Seq("windows", "counts", "tombs"), Some(AdditiveStore.Meta(Seq("k", "buckets"))))
 
   /** The window width the store was built at (probes run at this k). */
   def k(dir: String): Int = meta(dir)._1
@@ -77,22 +73,20 @@ object SpanPosStore {
   /** The digest-bucket fan-out of the window layout. */
   def numBuckets(dir: String): Int = meta(dir)._2
 
+  // The persisted (h1, h2) windows/counts only match probes computed
+  // under the SAME digest convention — the kernel's stamped meta read
+  // refuses a cross-convention (or pre-stamp) store loudly instead of
+  // silently matching nothing.
   private def meta(dir: String): (Int, Int) = {
-    val kv = graft.sources.BucketedParts.readMeta(metaPath(dir),
-      "span position store")
-    // The persisted (h1, h2) windows/counts only match probes computed
-    // under the SAME digest convention — refuse a cross-convention (or
-    // pre-stamp) store loudly instead of silently matching nothing.
-    graft.sources.BucketedParts.requireDigestMatch(kv,
-      "span position store", dir)
+    val kv = kernel.readMeta(dir)
     (kv("k").toInt, kv("buckets").toInt)
   }
 
   private def bucketOf(h1: Column, nb: Int): Column =
-    graft.sources.BucketedParts.bucketOf(h1, nb)
+    BucketedParts.bucketOf(h1, nb)
 
   private def inBuckets(bs: Seq[Int]): Column =
-    graft.sources.BucketedParts.inBuckets(bs)
+    BucketedParts.inBuckets(bs)
 
   /** The positional window relation of one document set, bucket column
     * attached: (id, i, h1, h2, __b). Derived by the SAME kernel every
@@ -113,46 +107,38 @@ object SpanPosStore {
     win.groupBy(col("h1"), col("h2"), col("__b"))
       .agg((count(lit(1)) * sign).as("n_occ"))
 
-  private def writeBucketed(path: String, df: DataFrame, nb: Int): Unit =
-    graft.sources.BucketedParts.writeBucketed(path, df, nb)
+  /** The additive fold of count parts: net-≤0 digests drop. */
+  private def foldedCounts(counts: DataFrame): DataFrame =
+    counts.groupBy(col("h1"), col("h2"), col("__b"))
+      .agg(sum(col("n_occ")).as("n_occ")).filter(col("n_occ") > 0)
 
-  private def readParts(spark: SparkSession, root: String,
-                        names: Seq[String]): DataFrame =
-    graft.sources.BucketedParts.readParts(spark, root, names)
+  private def writeBucketed(dir: String, rel: String, name: String,
+                            df: DataFrame, nb: Int): Unit =
+    BucketedParts.writeBucketed(kernel.path(dir, rel, name), df, nb)
 
-  private def liveNames(dir: String, tag: Option[String]): Seq[String] = {
-    val names = tag.fold(DeltaParts.list(dir))(t => DeltaParts.listAt(dir, t))
-    require(names.nonEmpty,
-      s"no span position store at '$dir' — run init first")
-    names
+  /** An append part: the windows written FIRST and the counts derived
+    * from a read-back of the written files — persisting then re-scanning
+    * fixed-width rows beats caching O(corpus tokens) of exploded rows in
+    * the block manager (the [[Bm25Store]] parts materialization
+    * argument, disk-shaped); no tombstones. */
+  private def writeAppendPart(spark: SparkSession, dir: String, name: String,
+                              docs: DataFrame, idCol: String, textCol: String,
+                              k: Int, nb: Int): Unit = {
+    writeBucketed(dir, "windows", name, windowsOf(docs, idCol, textCol, k, nb), nb)
+    val win = kernel.read(spark, dir, "windows", Seq(name))
+    writeBucketed(dir, "counts", name, countsOf(win, 1), nb)
+    kernel.write(win.select(col("id")).limit(0), dir, "tombs", name)
   }
 
   /** O(corpus), once; REFUSES a previously-used dir (the
-    * [[graft.sources.AdditiveLedger.init]] run-once contract). The
-    * corpus-sized window relation is written FIRST and the counts
-    * derive from a read-back of the written files — persisting then
-    * re-scanning fixed-width rows beats caching O(corpus tokens) of
-    * exploded rows in the block manager (the [[Bm25Store]] parts
-    * materialization argument, disk-shaped). */
+    * [[graft.sources.AdditiveStore.init]] run-once contract). */
   def init(spark: SparkSession, dir: String, corpus: DataFrame,
            idCol: String, textCol: String, k: Int,
            numBuckets: Int = 64): Unit = {
     require(k >= 2, s"span width k must be >= 2: $k")
     require(numBuckets >= 1, s"numBuckets must be >= 1: $numBuckets")
-    AdditiveLedger.init(dir, "span position store", "part_00000",
-        extraPaths = Seq(metaPath(dir))) { n =>
-      val winPath = s"${windowsDir(dir)}/$n"
-      writeBucketed(winPath, windowsOf(corpus, idCol, textCol, k, numBuckets), numBuckets)
-      val win = spark.read.parquet(winPath)
-      writeBucketed(s"${countsDir(dir)}/$n", countsOf(win, 1), numBuckets)
-      win.select(col("id")).limit(0)
-        .write.mode("overwrite").parquet(s"${tombsDir(dir)}/$n")
-      // Meta lands LAST inside the callback: a crash before this point
-      // leaves neither _PARTS nor _meta, so a retry re-runs clean.
-      graft.sources.BucketedParts.writeMeta(metaPath(dir),
-        Seq("k" -> k.toString, "buckets" -> numBuckets.toString,
-          graft.sources.BucketedParts.digestStamp))
-      ()
+    kernel.init(dir, Seq("k" -> k.toString, "buckets" -> numBuckets.toString)) { n =>
+      writeAppendPart(spark, dir, n, corpus, idCol, textCol, k, numBuckets)
     }
   }
 
@@ -164,7 +150,7 @@ object SpanPosStore {
              idCol: String, textCol: String,
              name: Option[String] = None): Unit = {
     val (kk, nb) = meta(dir)
-    val tombs = readParts(spark, tombsDir(dir), liveNames(dir, None)).distinct()
+    val tombs = kernel.readEach(spark, dir, "tombs", kernel.names(dir)).distinct()
     val clash = tombs
       .join(broadcast(batch.select(col(idCol).as("id")).distinct()), Seq("id"),
         "left_semi")
@@ -174,14 +160,8 @@ object SpanPosStore {
         s"ids ${clash.mkString(", ")} (…) — a re-appended tombstoned id " +
         "would be silently erased by the tombstone anti-join at read " +
         "time; run compact first (it folds tombstones away).")
-    AdditiveLedger.mutateNamed(dir, roots(dir), name) { n =>
-      val winPath = s"${windowsDir(dir)}/$n"
-      writeBucketed(winPath, windowsOf(batch, idCol, textCol, kk, nb), nb)
-      val win = spark.read.parquet(winPath)
-      writeBucketed(s"${countsDir(dir)}/$n", countsOf(win, 1), nb)
-      win.select(col("id")).limit(0)
-        .write.mode("overwrite").parquet(s"${tombsDir(dir)}/$n")
-      DeltaParts.add(dir, n)
+    kernel.mutate(dir, name) { n =>
+      writeAppendPart(spark, dir, n, batch, idCol, textCol, kk, nb)
     }
   }
 
@@ -194,15 +174,13 @@ object SpanPosStore {
              idCol: String, textCol: String,
              name: Option[String] = None): Unit = {
     val (kk, nb) = meta(dir)
-    liveNames(dir, None) // loud on an uninitialized store
-    AdditiveLedger.mutateNamed(dir, roots(dir), name) { n =>
+    kernel.names(dir) // loud on an uninitialized store
+    kernel.mutate(dir, name) { n =>
       val win = windowsOf(removedDocs, idCol, textCol, kk, nb)
         .localCheckpoint(true) // negative counts + empty-window schema
-      writeBucketed(s"${windowsDir(dir)}/$n", win.limit(0), nb)
-      writeBucketed(s"${countsDir(dir)}/$n", countsOf(win, -1), nb)
-      removedDocs.select(col(idCol).as("id")).distinct()
-        .write.mode("overwrite").parquet(s"${tombsDir(dir)}/$n")
-      DeltaParts.add(dir, n)
+      writeBucketed(dir, "windows", n, win.limit(0), nb)
+      writeBucketed(dir, "counts", n, countsOf(win, -1), nb)
+      kernel.write(removedDocs.select(col(idCol).as("id")).distinct(), dir, "tombs", n)
     }
   }
 
@@ -213,10 +191,10 @@ object SpanPosStore {
   def readWindows(spark: SparkSession, dir: String,
                   tag: Option[String] = None,
                   bucketFilter: Option[Seq[Int]] = None): DataFrame = {
-    val names = liveNames(dir, tag)
-    val wins0 = readParts(spark, windowsDir(dir), names)
+    val names = kernel.names(dir, tag)
+    val wins0 = kernel.readEach(spark, dir, "windows", names)
     val wins = bucketFilter.fold(wins0)(bs => wins0.filter(inBuckets(bs)))
-    val tombs = readParts(spark, tombsDir(dir), names).distinct()
+    val tombs = kernel.readEach(spark, dir, "tombs", names).distinct()
     wins.join(tombs, Seq("id"), "left_anti")
   }
 
@@ -229,44 +207,26 @@ object SpanPosStore {
   def readCounts(spark: SparkSession, dir: String,
                  tag: Option[String] = None,
                  bucketFilter: Option[Seq[Int]] = None): DataFrame = {
-    val names = liveNames(dir, tag)
-    val all0 = readParts(spark, countsDir(dir), names)
+    val names = kernel.names(dir, tag)
+    val all0 = kernel.readEach(spark, dir, "counts", names)
     val all = bucketFilter.fold(all0)(bs => all0.filter(inBuckets(bs)))
-    if (names.size == 1) all
-    else all.groupBy(col("h1"), col("h2"), col("__b"))
-      .agg(sum(col("n_occ")).as("n_occ")).filter(col("n_occ") > 0)
+    if (names.size == 1) all else foldedCounts(all)
   }
 
   /** Scheduled fold: tombstones applied and dropped, counts summed,
     * zeroed digests gone, single-part pushed reads restored. */
   def compact(spark: SparkSession, dir: String): Unit =
-    AdditiveLedger.compactWith(dir, roots(dir)) { (gen, old) =>
+    kernel.compact(dir) { (gen, old) =>
       val nb = meta(dir)._2
-      val tombs = readParts(spark, tombsDir(dir), old).distinct()
+      val tombs = kernel.readEach(spark, dir, "tombs", old).distinct()
         .localCheckpoint(true)
-      val win = readParts(spark, windowsDir(dir), old)
+      val win = kernel.readEach(spark, dir, "windows", old)
         .join(tombs, Seq("id"), "left_anti")
-      writeBucketed(s"${windowsDir(dir)}/$gen", win, nb)
-      writeBucketed(s"${countsDir(dir)}/$gen",
-        readParts(spark, countsDir(dir), old)
-          .groupBy(col("h1"), col("h2"), col("__b"))
-          .agg(sum(col("n_occ")).as("n_occ")).filter(col("n_occ") > 0), nb)
-      tombs.limit(0).write.mode("overwrite").parquet(s"${tombsDir(dir)}/$gen")
+      writeBucketed(dir, "windows", gen, win, nb)
+      writeBucketed(dir, "counts", gen,
+        foldedCounts(kernel.readEach(spark, dir, "counts", old)), nb)
+      kernel.write(tombs.limit(0), dir, "tombs", gen)
     }
-
-  def snapshot(dir: String, tag: String): Seq[String] = DeltaParts.snapshot(dir, tag)
-  def dropSnapshot(dir: String, tag: String): Unit = DeltaParts.dropSnapshot(dir, tag)
-  def restore(dir: String, tag: String): Unit = DeltaParts.restore(dir, tag)
-
-  /** Storage audit: the three-relation ledger plus the meta pin. */
-  def fsck(spark: SparkSession, dir: String): DataFrame = {
-    val metaOk = graft.sources.StoreFs.get.exists(metaPath(dir))
-    graft.sources.StoreCheck.deltaParts(spark, dir, roots(dir))
-      .unionByName(graft.sources.StoreCheck.row(spark, dir, "meta_resolves",
-        metaOk,
-        if (metaOk) { val (kk, nb) = meta(dir); s"k=$kk buckets=$nb" }
-        else s"missing ${metaPath(dir)} — probes cannot resolve k"))
-  }
 
   /**
    * Admission-time maximal repeats against the STORED corpus — answers

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.QuantileSketch.{quantileSketch, quantileSketchMerge, quantileSketchQuery}
-import graft.sources.DeltaParts
+import graft.sources.AdditiveStore
 
 /**
  * Standing per-group distribution summaries — the persisted form of the
@@ -20,9 +20,9 @@ import graft.sources.DeltaParts
  * `x_outlier_trim` p99 length rule, ppl tercile cuts) keep CURRENT
  * thresholds without rescanning 100 TB per refresh.
  *
- * Ledger mechanics ride [[graft.sources.AdditiveLedger]] (shared with
- * every additive store): a DeltaParts `_PARTS` ledger (atomic publish),
- * batch-named replay-idempotent [[append]] with the
+ * Ledger mechanics ride the [[graft.sources.AdditiveStore]] kernel
+ * (shared with every additive store): a DeltaParts `_PARTS` ledger
+ * (atomic publish), batch-named replay-idempotent [[append]] with the
  * compaction-surviving `_absorbed` names-ledger, deferred-GC
  * compaction, and snapshot tags / restore for training reproducibility.
  *
@@ -39,11 +39,9 @@ import graft.sources.DeltaParts
  * [[init]] over the surviving corpus on a fresh dir — schedule it like
  * any bulk rebuild.
  */
-object StatsStore {
+object StatsStore extends AdditiveStore.Lifecycle {
 
-  import graft.sources.AdditiveLedger
-
-  private def sketchesDir(dir: String) = s"$dir/sketches"
+  val kernel: AdditiveStore = AdditiveStore("stats store", Seq("sketches"))
 
   /** One row per group: (g, sketch, n). */
   private def summarize(batch: DataFrame, groupCol: String, valueCol: String,
@@ -52,11 +50,13 @@ object StatsStore {
       .agg(quantileSketch(col(valueCol).cast("double"), accuracy).as("sketch"),
         count(col(valueCol)).as("n"))
 
-  private def writePart(dir: String, name: String, rows: DataFrame,
-                        ledger: Boolean = true): Unit = {
-    rows.write.mode("overwrite").parquet(s"${sketchesDir(dir)}/$name")
-    if (ledger) DeltaParts.add(dir, name)
-  }
+  /** The group fold of stored sketch rows — shared by reads and
+    * [[compact]]. */
+  private def merged(spark: SparkSession, dir: String,
+                     names: Seq[String]): DataFrame =
+    kernel.read(spark, dir, "sketches", names)
+      .groupBy(col("g"))
+      .agg(quantileSketchMerge(col("sketch")).as("sketch"), sum(col("n")).as("n"))
 
   /** Initialize from an existing corpus — O(corpus), once. REFUSES a
     * previously-used dir (the [[Bm25Store.init]] run-once contract: a
@@ -64,9 +64,8 @@ object StatsStore {
     * later replayed append silently drop real data). */
   def init(spark: SparkSession, dir: String, corpus: DataFrame,
            groupCol: String, valueCol: String, accuracy: Int = 1 << 20): Unit =
-    AdditiveLedger.init(dir, "stats store", "part_00000") { n =>
-      writePart(dir, n, summarize(corpus, groupCol, valueCol, accuracy),
-        ledger = false)
+    kernel.init(dir) { n =>
+      kernel.write(summarize(corpus, groupCol, valueCol, accuracy), dir, "sketches", n)
     }
 
   /** Append a batch's summaries in O(batch) — the standing parts are
@@ -79,21 +78,16 @@ object StatsStore {
   def append(spark: SparkSession, dir: String, batch: DataFrame,
              groupCol: String, valueCol: String, accuracy: Int = 1 << 20,
              name: Option[String] = None): Unit =
-    AdditiveLedger.mutateNamed(dir, Seq(sketchesDir(dir)), name) { n =>
-      writePart(dir, n, summarize(batch, groupCol, valueCol, accuracy))
+    kernel.mutate(dir, name) { n =>
+      kernel.write(summarize(batch, groupCol, valueCol, accuracy), dir, "sketches", n)
     }
 
   /** The folded summary — one row per group over the UNION of every
     * stored batch: (g, sketch, n). With `tag`, assembles the
     * [[snapshot]]-pinned parts instead of the live ledger. */
   def readSummaries(spark: SparkSession, dir: String,
-                    tag: Option[String] = None): DataFrame = {
-    val names = tag.fold(DeltaParts.list(dir))(t => DeltaParts.listAt(dir, t))
-    require(names.nonEmpty, s"no stats store at '$dir' — run init first")
-    spark.read.parquet(names.map(p => s"${sketchesDir(dir)}/$p"): _*)
-      .groupBy(col("g"))
-      .agg(quantileSketchMerge(col("sketch")).as("sketch"), sum(col("n")).as("n"))
-  }
+                    tag: Option[String] = None): DataFrame =
+    merged(spark, dir, kernel.names(dir, tag))
 
   /** Queried thresholds — one tiny row per group `(g, n, qs
     * array<double>)`, ready to broadcast back as an admission gate
@@ -106,32 +100,12 @@ object StatsStore {
         quantileSketchQuery(col("sketch"),
           array(qs.map(lit(_)): _*)).as("qs"))
 
-  /** Pin the current summary state under `tag`; [[readSummaries]] /
-    * [[quantiles]] with the tag replay it byte-identically across later
-    * appends and compactions. */
-  def snapshot(dir: String, tag: String): Seq[String] =
-    DeltaParts.snapshot(dir, tag)
-
-  def dropSnapshot(dir: String, tag: String): Unit =
-    DeltaParts.dropSnapshot(dir, tag)
-
-  /** Roll back to a tag (no data movement). Part names stay write-once
-    * across restores — the [[Bm25Store.restore]] monotonicity contract
-    * that keeps pending crash replays from double-counting. */
-  def restore(dir: String, tag: String): Unit =
-    DeltaParts.restore(dir, tag)
-
   /** Scheduled compaction: fold all live parts into one row per group.
     * Input is (parts × groups) sketch rows — group-count-sized, never
     * the corpus. Superseded parts stay one cycle for in-flight readers;
     * snapshot-pinned parts are never swept. */
   def compact(spark: SparkSession, dir: String): Unit =
-    AdditiveLedger.compactWith(dir, Seq(sketchesDir(dir))) { (gen, old) =>
-      writePart(dir, gen,
-        spark.read.parquet(old.map(p => s"${sketchesDir(dir)}/$p"): _*)
-          .groupBy(col("g"))
-          .agg(quantileSketchMerge(col("sketch")).as("sketch"),
-            sum(col("n")).as("n")),
-        ledger = false)
+    kernel.compact(dir) { (gen, old) =>
+      kernel.write(merged(spark, dir, old), dir, "sketches", gen)
     }
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.TopK
+import graft.sources.AdditiveStore
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -130,27 +131,25 @@ object Bm25 {
  * [[readIndex]] assembles the exact [[Bm25.index]] relation (spec-pinned
  * equal over the unioned corpus), so [[Bm25.searchIndex]] runs unchanged
  * on top — current statistics always, no rebuild. Parts ride the
- * [[graft.sources.DeltaParts]] ledger: atomic publish, batch-named
- * appends replay-idempotent, [[compact]] as the scheduled merge that
+ * [[AdditiveStore]] kernel: ONE ledger at the store root
+ * governs all five relations, so a part becomes visible in postings,
+ * df, and stats in the SAME atomic publish — no window where new
+ * postings score under old df. Batch-named appends are
+ * replay-idempotent, and [[compact]] is the scheduled merge that
  * restores single-part reads (and re-clusters postings by term).
+ *
+ * Snapshot tags pin "the exact index run X retrieved against"
+ * ([[readIndex]] with the tag replays it byte-identically). CONTRACT on
+ * [[restore]]: part names are write-once across the store's WHOLE
+ * history — a batch absorbed after the tag stays absorbed, so
+ * re-appending it under its old name is (correctly) a no-op; re-admit
+ * rolled-back content under a FRESH name. That monotonicity is what
+ * keeps crash replay safe.
  */
-object Bm25Store {
-  import graft.sources.DeltaParts
+object Bm25Store extends AdditiveStore.Lifecycle {
 
-  private def postingsDir(dir: String) = s"$dir/postings"
-  private def dfDir(dir: String) = s"$dir/df"
-  private def statsDir(dir: String) = s"$dir/stats"
-  private def docsDir(dir: String) = s"$dir/docs"
-  private def tombsDir(dir: String) = s"$dir/tombstones"
-
-  private def relationRoots(dir: String) =
-    Seq(postingsDir(dir), dfDir(dir), statsDir(dir), docsDir(dir), tombsDir(dir))
-
-  // Replay/compaction/crash-window mechanics live in
-  // [[graft.sources.AdditiveLedger]] — the `_absorbed` names-ledger,
-  // run-once init refusal, and deferred-GC compact cycle are shared
-  // with every additive store; only the five relations are BM25's.
-  import graft.sources.AdditiveLedger
+  val kernel: AdditiveStore = AdditiveStore(
+    "BM25 store", Seq("postings", "df", "stats", "docs", "tombstones"))
 
   /** The additive relations of one document set. Stats carry BOTH row
     * count (`n_docs` — what idf's N uses) and non-null-token-array
@@ -192,42 +191,32 @@ object Bm25Store {
     * decrements). */
   private def merged(spark: SparkSession, dir: String, names: Seq[String])
       : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val tombs = spark.read
-      .parquet(names.map(p => s"${tombsDir(dir)}/$p"): _*).distinct()
+    val tombs = kernel.read(spark, dir, "tombstones", names).distinct()
     def minusTombs(rel: DataFrame) =
       rel.join(tombs, Seq("doc_id"), "left_anti")
-    val postings = minusTombs(
-      spark.read.parquet(names.map(p => s"${postingsDir(dir)}/$p"): _*))
-    val docRows = minusTombs(
-      spark.read.parquet(names.map(p => s"${docsDir(dir)}/$p"): _*))
-    val dfParts = names.map(p => spark.read.parquet(s"${dfDir(dir)}/$p"))
+    val postings = minusTombs(kernel.read(spark, dir, "postings", names))
+    val docRows = minusTombs(kernel.read(spark, dir, "docs", names))
+    val dfParts = kernel.readEach(spark, dir, "df", names)
     val dfm =
-      if (dfParts.size == 1) dfParts.head
-      else dfParts.reduce(_ unionByName _)
-        .groupBy(col("term")).agg(sum(col("df")).as("df"))
-    val st = names.map(p => spark.read.parquet(s"${statsDir(dir)}/$p"))
-      .reduce(_ unionByName _)
+      if (names.size == 1) dfParts
+      else dfParts.groupBy(col("term")).agg(sum(col("df")).as("df"))
+    val st = kernel.readEach(spark, dir, "stats", names)
       .agg(sum(col("n_docs")).as("n_docs"), sum(col("n_dl")).as("n_dl"),
         sum(col("sum_dl")).as("sum_dl"))
     (postings, dfm, st, docRows, tombs)
   }
 
-  /** ONE ledger at the store root governs all three relations: a part
-    * becomes visible in postings, df, and stats in the SAME atomic
-    * publish — no window where new postings score under old df.
-    * `ledger = false` writes the files without publishing (compaction
-    * publishes via replace, never add — an add would transiently list
-    * the merged part alongside the parts it merged = double counts). */
+  /** One part's files across all five relations (the kernel ledgers
+    * it); postings are written term-clustered. */
   private def writePart(dir: String, name: String, postings: DataFrame,
                         df: DataFrame, stats: DataFrame, docRows: DataFrame,
-                        tombs: DataFrame, ledger: Boolean = true): Unit = {
-    postings.repartitionByRange(col("term")).sortWithinPartitions("term")
-      .write.mode("overwrite").parquet(s"${postingsDir(dir)}/$name")
-    df.write.mode("overwrite").parquet(s"${dfDir(dir)}/$name")
-    stats.write.mode("overwrite").parquet(s"${statsDir(dir)}/$name")
-    docRows.write.mode("overwrite").parquet(s"${docsDir(dir)}/$name")
-    tombs.write.mode("overwrite").parquet(s"${tombsDir(dir)}/$name")
-    if (ledger) DeltaParts.add(dir, name)
+                        tombs: DataFrame): Unit = {
+    kernel.write(postings.repartitionByRange(col("term")).sortWithinPartitions("term"),
+      dir, "postings", name)
+    kernel.write(df, dir, "df", name)
+    kernel.write(stats, dir, "stats", name)
+    kernel.write(docRows, dir, "docs", name)
+    kernel.write(tombs, dir, "tombstones", name)
   }
 
   /** Empty frames for the relations a part does not carry (delete parts
@@ -246,9 +235,9 @@ object Bm25Store {
     * named [[append]] reusing a batch id would silently skip real data. */
   def init(spark: SparkSession, dir: String, corpus: DataFrame,
            idCol: String, textCol: String): Unit =
-    AdditiveLedger.init(dir, "BM25 store", "part_00000") { n =>
+    kernel.init(dir) { n =>
       val (p, d, s, dr) = parts(corpus, idCol, textCol)
-      writePart(dir, n, p, d, s, dr, emptyTombsLike(dr), ledger = false)
+      writePart(dir, n, p, d, s, dr, emptyTombsLike(dr))
     }
 
   /** Append a batch of NEW documents (disjoint doc ids from everything
@@ -261,7 +250,7 @@ object Bm25Store {
     * records every name ever absorbed and compaction never touches it. */
   def append(spark: SparkSession, dir: String, newDocs: DataFrame,
              idCol: String, textCol: String, name: Option[String] = None): Unit =
-    AdditiveLedger.mutateNamed(dir, relationRoots(dir), name) { n =>
+    kernel.mutate(dir, name) { n =>
       val (p, d, s, dr) = parts(newDocs, idCol, textCol)
       writePart(dir, n, p, d, s, dr, emptyTombsLike(dr))
     }
@@ -289,10 +278,8 @@ object Bm25Store {
    */
   def delete(spark: SparkSession, dir: String, ids: DataFrame,
              idCol: String, name: Option[String] = None): Unit =
-    AdditiveLedger.mutateNamed(dir, relationRoots(dir), name) { n =>
-      val live = DeltaParts.list(dir)
-      require(live.nonEmpty, s"no BM25 store at '$dir' — run init first")
-      val (postings, dfRel, _, docRows, _) = merged(spark, dir, live)
+    kernel.mutate(dir, name) { n =>
+      val (postings, dfRel, _, docRows, _) = merged(spark, dir, kernel.names(dir))
       // No cast on the ids: the store's doc_id keeps the type parts()
       // preserved, and a lossy cast (string ids → null) would make the
       // semi-join find zero victims — a takedown that silently no-ops.
@@ -308,28 +295,6 @@ object Bm25Store {
         docRows.limit(0), victims.select(col("doc_id")))
     }
 
-  /** Pin the current index state under `tag` (training reproducibility:
-    * "the exact index run X retrieved against") — [[readIndex]] with the
-    * tag replays it byte-identically, and compaction sweeps never delete
-    * a pinned part ([[graft.sources.DeltaParts.snapshot]] semantics). */
-  def snapshot(dir: String, tag: String): Seq[String] =
-    DeltaParts.snapshot(dir, tag)
-
-  /** Release a tag; its parts become sweepable next compaction cycle. */
-  def dropSnapshot(dir: String, tag: String): Unit =
-    DeltaParts.dropSnapshot(dir, tag)
-
-  /** Roll the live index back to a [[snapshot]] tag (no data movement —
-    * pinned parts never left disk). CONTRACT: part names are write-once
-    * across the store's WHOLE history, restores included — a batch
-    * absorbed after the tag stays in the `_absorbed` ledger, so
-    * re-appending it under its old name is (correctly) a no-op; re-admit
-    * rolled-back content under a FRESH name. That monotonicity is not a
-    * quirk: it is exactly what keeps crash replay safe, and rewinding it
-    * on restore would let a pending replay double-count. */
-  def restore(dir: String, tag: String): Unit =
-    DeltaParts.restore(dir, tag)
-
   /** The assembled, searchable index — exactly [[Bm25.index]] over the
     * union of every stored document set. Postings parts concatenate
     * (multi-path parquet scan, pushdown intact in every part); df and
@@ -338,9 +303,7 @@ object Bm25Store {
     * parts instead of the live ledger — time travel over the index. */
   def readIndex(spark: SparkSession, dir: String,
                 tag: Option[String] = None): DataFrame = {
-    val names = tag.fold(DeltaParts.list(dir))(t => DeltaParts.listAt(dir, t))
-    require(names.nonEmpty, s"no BM25 store at '$dir' — run init first")
-    val (postings, dfm, st0, _, _) = merged(spark, dir, names)
+    val (postings, dfm, st0, _, _) = merged(spark, dir, kernel.names(dir, tag))
     // avgdl over docs with a token ARRAY (n_dl): avg() skips null-text
     // docs; n_docs (all rows) stays idf's N — exactly Bm25.index.
     val st = st0.select(col("n_docs"),
@@ -357,7 +320,7 @@ object Bm25Store {
     * exact again, same as a Lucene segment merge. O(index);
     * postings-sized, still far under the corpus text. */
   def compact(spark: SparkSession, dir: String): Unit =
-    AdditiveLedger.compactWith(dir, relationRoots(dir)) { (gen, old) =>
+    kernel.compact(dir) { (gen, old) =>
       // merge each additive relation from its own parts — exact integer
       // sums, no float round-trip through the assembled avgdl. Postings
       // and doc rows come back tombstone-filtered; df is rebuilt from
@@ -368,14 +331,8 @@ object Bm25Store {
       val postingsLive = postings.localCheckpoint(true)
       val dfLive = postingsLive.groupBy(col("term")).agg(count(lit(1)).as("df"))
       writePart(dir, gen, postingsLive, dfLive, st, docRows,
-        emptyTombsLike(docRows), ledger = false)
+        emptyTombsLike(docRows))
     }
-
-  /** Storage audit ([[graft.sources.StoreCheck]]): the one ledger's
-    * parts resolve across all five relation roots, tags pin present
-    * state, crash residue reports advisory. */
-  def fsck(spark: SparkSession, dir: String): org.apache.spark.sql.DataFrame =
-    graft.sources.StoreCheck.deltaParts(spark, dir, relationRoots(dir))
 }
 
 /**

@@ -601,6 +601,13 @@ object Admission {
     val parts = tag.fold(listParts(storeDir))(t =>
       graft.sources.DeltaParts.listAt(spanDir(storeDir), t))
     require(parts.nonEmpty, s"no span index under '${spanDir(storeDir)}' — run init first")
+    mergedSpanIndex(spark, storeDir, parts)
+  }
+
+  /** The additive merge of exactly `parts` — shared by
+    * [[readSpanIndex]] and [[compact]]. */
+  private def mergedSpanIndex(spark: SparkSession, storeDir: String,
+                              parts: Seq[String]): DataFrame = {
     // The parts persist (__h1, __h2) digests: require the convention
     // they were built under (stamped at init) to match this build's —
     // a cross-convention probe silently matches nothing and admits
@@ -756,7 +763,7 @@ object Admission {
   private def absorb(spark: SparkSession, storeDir: String, grown0: DataFrame,
                      idCol: String, textCol: String, cfg: Config,
                      deltaName: String): Unit = {
-    import graft.sources.{AdditiveLedger, DeltaParts}
+    import graft.sources.AdditiveLedger
     if (AdditiveLedger.isAbsorbed(spanDir(storeDir), deltaName)) return
     val grown = grown0.localCheckpoint(true)
     // Mid-absorb PROGRESS MARKER (exact policy only): the exact store's
@@ -816,7 +823,6 @@ object Admission {
         Some(deltaName)) { n =>
       spanIndexOf(grown, idCol, textCol, cfg)
         .write.mode("overwrite").parquet(s"${spanDir(storeDir)}/$n")
-      DeltaParts.add(spanDir(storeDir), n)
     }
   }
 
@@ -975,17 +981,16 @@ object Admission {
   /** Scheduled span-index compaction: merge base + deltas into one part
     * (restoring the single filter-pushed scan) and publish atomically.
     * O(index) — digest-only rows, orders of magnitude under the corpus. */
-  def compact(spark: SparkSession, storeDir: String): Unit = {
-    if (listParts(storeDir).size <= 1) return
-    val gen = f"part_c${System.nanoTime()}%d"
-    // Digests whose counts an [[unadmit]] decrement has zeroed are dead
-    // rows — physically dropped here, the same way Bm25Store.compact
-    // folds its tombstones away.
-    readSpanIndex(spark, storeDir)
-      .filter(col("n_docs") > 0 || col("n_occ") > 0)
-      .write.mode("overwrite").parquet(s"${spanDir(storeDir)}/$gen")
-    graft.sources.DeltaParts.replaceAll(spanDir(storeDir), gen)
-  }
+  def compact(spark: SparkSession, storeDir: String): Unit =
+    graft.sources.AdditiveLedger.compactWith(spanDir(storeDir),
+        Seq(spanDir(storeDir))) { (gen, old) =>
+      // Digests whose counts an [[unadmit]] decrement has zeroed are dead
+      // rows — physically dropped here, the same way Bm25Store.compact
+      // folds its tombstones away.
+      mergedSpanIndex(spark, storeDir, old)
+        .filter(col("n_docs") > 0 || col("n_occ") > 0)
+        .write.mode("overwrite").parquet(s"${spanDir(storeDir)}/$gen")
+    }
 
   /**
    * Remove CONTENT from the standing stores — the takedown /
@@ -1013,7 +1018,7 @@ object Admission {
               idCol: String, textCol: String, cfg: Config = Config(),
               name: Option[String] = None): Unit =
       graft.sources.WriterLease.withLease(storeDir, "admission-unadmit") {
-    import graft.sources.{AdditiveLedger, DeltaParts}
+    import graft.sources.AdditiveLedger
     // A fixed-k Config against an exact store would silently SKIP the
     // SaStore tombstone and the removed content would stay probe-able.
     requirePolicyMatch(storeDir, cfg)
@@ -1042,7 +1047,6 @@ object Admission {
         .select(col("__h1"), col("__h2"),
           (-col("n_docs")).as("n_docs"), (-col("n_occ")).as("n_occ"))
         .write.mode("overwrite").parquet(s"${spanDir(storeDir)}/$nn")
-      DeltaParts.add(spanDir(storeDir), nn)
     }
   }
 
@@ -1070,7 +1074,7 @@ object Admission {
     // as sound as every store a verdict reads. The ∞-gram report's
     // reference store rides along for the same reason.
     val withDecon = cfg.decon.fold(withSem)(st =>
-      withSem.unionByName(graft.operators.EvalStore.check(spark, st.registryDir)))
+      withSem.unionByName(graft.operators.EvalStore.fsck(spark, st.registryDir)))
     cfg.ngram.fold(withDecon)(st =>
       withDecon.unionByName(graft.operators.NgramStore.fsck(spark, st.storeDir)))
   }

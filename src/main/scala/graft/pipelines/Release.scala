@@ -48,14 +48,20 @@ object Release {
       rest: (SparkSession, String, String) => Unit,
       pinned: (String, String) => Boolean)
 
-  import graft.operators.{Bm25Store, CardStore, EvalStore, LineStore, LmStore, MediaStore, SemDedupStore, StatsStore}
-  import graft.sources.{DeltaParts, TableSink}
+  import graft.operators.{Bm25Store, CardStore, EvalStore, LineStore, LmStore,
+    MediaStore, NgramStore, PqStore, SaStore, SemDedupStore, SpanPosStore, StatsStore}
+  import graft.sources.{AdditiveStore, TableSink}
 
-  private def ledgerOps(snap: (String, String) => Unit,
-                        drop: (String, String) => Unit,
-                        rest: (String, String) => Unit): Ops =
-    Ops((_, d, t) => snap(d, t), (_, d, t) => drop(d, t), (_, d, t) => rest(d, t),
-      (d, t) => DeltaParts.snapshots(d).contains(t))
+  private def ledgerOps(k: AdditiveStore): Ops =
+    Ops((_, d, t) => { k.snapshot(d, t); () }, (_, d, t) => k.dropSnapshot(d, t),
+      (_, d, t) => k.restore(d, t), k.pinned)
+
+  /** The additive stores, each pinned through its kernel. */
+  private val ledgerKinds: Seq[(String, AdditiveStore)] = Seq(
+    "evalstore" -> EvalStore.kernel, "bm25" -> Bm25Store.kernel,
+    "lm" -> LmStore.kernel, "lines" -> LineStore.kernel,
+    "spanpos" -> SpanPosStore.kernel, "ngram" -> NgramStore.kernel,
+    "sa" -> SaStore.kernel, "stats" -> StatsStore.kernel, "card" -> CardStore.kernel)
 
   /** The store families a release can pin. Every standing store in the
     * engine is here; "table" covers any raw [[TableSink]] table (the
@@ -79,10 +85,10 @@ object Release {
       (_, d, t) => SemDedupStore.dropSnapshot(d, t),
       (s, d, t) => SemDedupStore.restore(s, d, t),
       (d, t) => SemDedupStore.snapshotPinned(d, t)),
-    "pq" -> Ops((_, d, t) => graft.operators.PqStore.snapshot(d, t),
-      (_, d, t) => graft.operators.PqStore.dropSnapshot(d, t),
-      (_, d, t) => graft.operators.PqStore.restore(d, t),
-      (d, t) => graft.operators.PqStore.snapshotPinned(d, t)),
+    "pq" -> Ops((_, d, t) => PqStore.snapshot(d, t),
+      (_, d, t) => PqStore.dropSnapshot(d, t),
+      (_, d, t) => PqStore.restore(d, t),
+      (d, t) => PqStore.snapshotPinned(d, t)),
     // Idempotent-or-refuse, like every other member kind: a bare
     // TableSink.snapshot silently RE-POINTS an existing tag, so a
     // crashed freeze re-run after an intervening mutation would commit
@@ -91,31 +97,8 @@ object Release {
     "table" -> Ops((_, d, t) => TableSink.snapshotNoRepoint(d, t, context = "freeze"),
       (_, d, t) => TableSink.dropSnapshot(d, t),
       (_, d, t) => TableSink.restore(d, t),
-      (d, t) => TableSink.listSnapshots(d).contains(t)),
-    "evalstore" -> ledgerOps((d, t) => { EvalStore.snapshot(d, t); () },
-      EvalStore.dropSnapshot, EvalStore.restore),
-    "bm25" -> ledgerOps((d, t) => { Bm25Store.snapshot(d, t); () },
-      Bm25Store.dropSnapshot, Bm25Store.restore),
-    "lm" -> ledgerOps((d, t) => { LmStore.snapshot(d, t); () },
-      LmStore.dropSnapshot, LmStore.restore),
-    "lines" -> ledgerOps((d, t) => { LineStore.snapshot(d, t); () },
-      LineStore.dropSnapshot, LineStore.restore),
-    "spanpos" -> ledgerOps(
-      (d, t) => { graft.operators.SpanPosStore.snapshot(d, t); () },
-      graft.operators.SpanPosStore.dropSnapshot,
-      graft.operators.SpanPosStore.restore),
-    "ngram" -> ledgerOps(
-      (d, t) => { graft.operators.NgramStore.snapshot(d, t); () },
-      graft.operators.NgramStore.dropSnapshot,
-      graft.operators.NgramStore.restore),
-    "sa" -> ledgerOps(
-      (d, t) => { graft.operators.SaStore.snapshot(d, t); () },
-      graft.operators.SaStore.dropSnapshot,
-      graft.operators.SaStore.restore),
-    "stats" -> ledgerOps((d, t) => { StatsStore.snapshot(d, t); () },
-      StatsStore.dropSnapshot, StatsStore.restore),
-    "card" -> ledgerOps((d, t) => { CardStore.snapshot(d, t); () },
-      CardStore.dropSnapshot, CardStore.restore))
+      (d, t) => TableSink.listSnapshots(d).contains(t))) ++
+    ledgerKinds.map { case (kind, k) => kind -> ledgerOps(k) }
 
   private def manifest(manifestDir: String, tag: String): String =
     s"$manifestDir/release_$tag"

@@ -1,21 +1,16 @@
 package graft.sources
 
 /**
- * Shared scaffolding for the single-concern additive-count stores
- * ([[graft.operators.LmStore]], [[graft.operators.LineStore]]): the
- * init-refusal, the named-mutation replay dance, and the
- * compact-sweep-publish cycle are store-agnostic — only the relation
- * contents differ — so the crash-window reasoning lives ONCE here.
+ * The ledger steps behind every additive store: the init refusal, the
+ * named-mutation replay dance, and the compact-sweep-publish cycle are
+ * store-agnostic — only the relation contents differ — so the
+ * crash-window reasoning lives ONCE here. Stores reach these steps
+ * through their [[AdditiveStore]] kernel;
+ * [[graft.pipelines.Admission]] drives them directly, because its span
+ * ledger's mutations are sequenced around the fingerprint TableSink's
+ * key-idempotent side effects via [[isAbsorbed]]/[[nextName]].
  *
- * Every additive store rides this helper: the single-relation ones
- * ([[graft.operators.LmStore]], [[graft.operators.LineStore]],
- * [[graft.operators.StatsStore]]) and the multi-relation ones
- * ([[graft.operators.Bm25Store]] — five relations, one ledger;
- * [[graft.pipelines.Admission]] — span inventory, with the
- * fingerprint TableSink's key-idempotent mutations sequenced around
- * the ledger dance via [[isAbsorbed]]/[[nextName]]).
- *
- * Mutations ([[mutateNamed]], [[compactWith]], [[recordInit]]) hold the
+ * Mutations ([[init]], [[mutateNamed]], [[compactWith]]) hold the
  * store dir's [[WriterLease]] for their whole multi-step dance — the
  * single-writer contract enforced fail-loud, not just documented.
  */
@@ -58,16 +53,6 @@ object AdditiveLedger {
           "delete the store dir (or point at a fresh one) to rebuild.")
   }
 
-  /** Record the init part in both ledgers (call after the part files
-    * are on disk — [[DeltaParts.add]] is the atomic publish). Prefer
-    * [[init]], which holds the lease across the WHOLE freshness-check →
-    * write → record dance. */
-  def recordInit(dir: String, name: String): Unit =
-    WriterLease.withLease(dir, "ledger-init") {
-      DeltaParts.add(dir, name)
-      DeltaParts.add(absorbedDir(dir), name)
-    }
-
   /** The whole init dance under ONE lease: freshness check, the init
     * part write, and the two ledger adds. Two operators racing an init
     * on one dir would otherwise BOTH pass [[requireFresh]] (no `_PARTS`
@@ -89,10 +74,10 @@ object AdditiveLedger {
    * INCLUDING a replay after compaction folded the named part:
    *  - an absorbed name is a completed mutation → no-op;
    *  - a ledgered-but-unabsorbed name crashed between the part write
-   *    and the absorbed add — the files are complete (the ledger add is
-   *    the write's last step), so only the record finishes;
-   *  - otherwise `write(name)` must put the part files on disk AND
-   *    ledger them (its last step), then the absorbed record lands.
+   *    and the absorbed add — the files are complete (the ledger add
+   *    follows the write), so only the record finishes;
+   *  - otherwise `write(name)` puts the part files on disk, then the
+   *    part is ledgered and the absorbed record lands.
    */
   def mutateNamed(dir: String, roots: Seq[String], name: Option[String])
                  (write: String => Unit): Unit =
@@ -105,7 +90,10 @@ object AdditiveLedger {
       val n = name.getOrElse(DeltaParts.nextIndexedName(dir, roots,
         extraNames = absorbed))
       if (!absorbed.contains(n)) {
-        if (!DeltaParts.list(dir).contains(n)) write(n)
+        if (!DeltaParts.list(dir).contains(n)) {
+          write(n)
+          DeltaParts.add(dir, n)
+        }
         DeltaParts.add(absorbedDir(dir), n)
       }
     }

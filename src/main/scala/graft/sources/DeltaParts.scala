@@ -13,9 +13,9 @@ package graft.sources
  *
  * Single-writer by contract (scheduled ingest/maintenance jobs, not a
  * concurrent endpoint) — the read-modify-write mutations ([[add]],
- * [[replaceAll]], [[restore]]) enforce it fail-loud under the dir's
- * [[WriterLease]]; readers resolve either the old or the new
- * ledger, never a torn one. Replay-safe: parts are named by their
+ * [[restore]], and the [[AdditiveLedger.compactWith]] cycle) enforce it
+ * fail-loud under the dir's [[WriterLease]]; readers resolve either the
+ * old or the new ledger, never a torn one. Replay-safe: parts are named by their
  * batch/epoch, rewriting a part is an idempotent overwrite, and
  * [[add]] is add-if-absent.
  *
@@ -78,8 +78,8 @@ object DeltaParts {
   // The DeltaParts analog of TableSink.snapshot: a tag records the EXACT
   // live parts-list at tag time under `_snapshots/<tag>`, so a training
   // run can later re-read the index state that admitted its corpus
-  // byte-for-byte ([[listAt]]) — and [[sweepOrphans]]/[[replaceAll]]
-  // callers protect [[pinned]] parts, so compaction cycles can never
+  // byte-for-byte ([[listAt]]) — and [[sweepOrphans]] callers protect
+  // [[pinned]] parts, so compaction cycles can never
   // delete a part some tag still names. Tags pin NAMES; the contract
   // that makes that byte-pinning is the ledger's own: parts are
   // immutable once ledgered (append skips, never rewrites, a live part).
@@ -147,23 +147,11 @@ object DeltaParts {
       publish(dir, listAt(dir, tag))
     }
 
-  /** Replace all live parts with `keep` (compaction publish). The parts
-    * it supersedes are NOT deleted here — an in-flight reader that
-    * resolved the previous ledger may still be scanning them; they stay
-    * as orphans and the NEXT replaceAll sweeps them (by then a full
-    * compaction cycle old — the TableSink keep-one-generation idiom,
-    * count-based). Sweeping happens via [[sweepOrphans]] so multi-root
-    * stores can clean every relation root under the one ledger.
-    * Snapshot-[[pinned]] parts are always protected. */
-  def replaceAll(dir: String, keep: String): Unit =
-    WriterLease.withLease(dir, "deltaparts-compact") {
-      val before = list(dir)
-      sweepOrphans(dir, protect = before.toSet + keep ++ pinned(dir))
-      publish(dir, Seq(keep))
-    }
-
   /** Delete every part dir under `root` that is neither in `protect`
-    * nor a ledger file — the orphans a previous compaction left behind.
+    * nor a ledger file — the orphans a previous compaction left behind
+    * (the superseded parts of a compaction stay on disk one more cycle
+    * for in-flight readers of the old ledger; see
+    * [[AdditiveLedger.compactWith]]).
     * Call BEFORE publishing the new ledger, protecting the currently
     * live parts plus the incoming one. Names starting with `_` are the
     * reserved ledger/metadata namespace (`_PARTS`, sibling ledgers like

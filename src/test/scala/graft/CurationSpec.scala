@@ -436,6 +436,25 @@ class CurationSpec extends AnyFunSuite with SparkSpec {
       maxIter = 0).count() == 6)
   }
 
+  test("connectedComponents refuses a driver-edge cutoff above Int.MaxValue - 1") {
+    import spark.implicits._
+    val pairs = Seq((2L, 1L), (7L, 8L)).toDF("id_a", "id_b")
+    val key = graft.operators.DedupOps.CcDriverMaxEdgesConf
+    try {
+      // Long.MaxValue used to wrap limit(n + 1) to limit(0) and collect
+      // unbounded; any value above Int.MaxValue - 1 cannot be bounded.
+      Seq(Long.MaxValue, Int.MaxValue.toLong).foreach { v =>
+        spark.conf.set(key, v.toString)
+        val e = intercept[IllegalArgumentException](
+          graft.operators.DedupOps.connectedComponents(pairs, "id_a", "id_b"))
+        assert(e.getMessage.contains(key) && e.getMessage.contains(v.toString))
+      }
+      spark.conf.set(key, (Int.MaxValue - 1).toString)
+      assert(graft.operators.DedupOps.connectedComponents(pairs, "id_a", "id_b")
+        .count() == 4)
+    } finally spark.conf.unset(key)
+  }
+
   test("canonicalizeUrl: two crawls of one page collide; distinct pages do not") {
     import spark.implicits._
     val urls = Seq(

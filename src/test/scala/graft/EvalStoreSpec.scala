@@ -131,7 +131,7 @@ class EvalStoreSpec extends AnyFunSuite with SparkSpec {
       EvalStore.init(spark, dir, "suite_b", suiteB, "text", n = 3))
     assert(e.getMessage.contains("already initialized"))
     assert(EvalStore.gramSize(dir) === 3)
-    val rep = EvalStore.check(spark, dir)
+    val rep = EvalStore.fsck(spark, dir)
     assert(rep.filter(!col("ok")).count() === 0)
     assert(rep.filter(col("check") === "gram_size_pinned").count() === 1)
   }

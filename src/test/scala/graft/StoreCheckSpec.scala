@@ -179,6 +179,45 @@ class StoreCheckSpec extends AnyFunSuite with SparkSpec {
     assert(failures(graft.operators.CardStore.fsck(spark, cardDir)).isEmpty)
   }
 
+  test("every additive store: fsck all-ok after init; a vanished live part is caught") {
+    import graft.operators._
+    import graft.sources.AdditiveStore
+    val docs = Seq(
+      (1L, "the quick brown fox jumps over the lazy dog"),
+      (2L, "the quick brown fox naps under the lazy dog"),
+      (3L, "an entirely different line of text")).toDF("doc_id", "text")
+    val cardDocs = docs.select(col("doc_id"), lit("s0").as("source"),
+      lit("l0").as("lang"), col("text"), length(col("text")).as("n_chars"))
+    val stores: Seq[(String, AdditiveStore.Lifecycle, String => Unit)] = Seq(
+      ("lines", LineStore, d => LineStore.init(spark, d, docs, "doc_id", "text")),
+      ("lm", LmStore, d => LmStore.init(spark, d, docs, "text")),
+      ("stats", StatsStore, d => StatsStore.init(spark, d,
+        docs.select(lit("g").as("g"), col("doc_id").as("v")), "g", "v")),
+      ("eval", EvalStore, d => EvalStore.init(spark, d, "suite_a", docs, "text", n = 3)),
+      ("card", CardStore, d => CardStore.init(spark, d, cardDocs,
+        "source", "lang", "text", "n_chars", t => length(t).cast("double"))),
+      ("bm25", Bm25Store, d => Bm25Store.init(spark, d, docs, "doc_id", "text")),
+      ("ngram", NgramStore, d => NgramStore.init(spark, d, docs, "text",
+        maxN = 3, numBuckets = 4)),
+      ("spanpos", SpanPosStore, d => SpanPosStore.init(spark, d, docs, "doc_id",
+        "text", k = 3, numBuckets = 4)),
+      ("sa", SaStore, d => SaStore.init(spark, d, docs, "doc_id", "text",
+        numBuckets = 4)))
+    stores.foreach { case (kind, store, init) =>
+      val dir = freshDir(s"fsck-$kind")
+      init(dir)
+      val rep = store.fsck(spark, dir)
+      assert(failures(rep).isEmpty, s"$kind: ${failures(rep)}")
+      store.kernel.meta.foreach { m =>
+        assert(rep.filter(col("check") === m.check && col("ok")).count() === 1,
+          s"$kind: meta row")
+      }
+      val root = store.kernel.roots(dir).last
+      DeltaParts.rmDir(s"$root/${DeltaParts.list(dir).head}")
+      assert(failures(store.fsck(spark, dir)).contains("part_dirs_present"), kind)
+    }
+  }
+
   test("a held lease reports advisory with the holder, never a failure") {
     val dir = freshDir("fsck-lease")
     upsert(dir, 0, 20, 1)
