@@ -2,8 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types._
 
@@ -65,6 +65,18 @@ object CentroidKernels extends Serializable {
     }
     bestId
   }
+
+  /** The `n` most cosine-similar centroid ids, best first: descending
+    * Spark double ordering (NaN greatest), ties to the lower id — the
+    * order of a `row_number()` window over (desc(sim), cent_id). */
+  def nearestN(v: ArrayData, cents: Cents, n: Int): ArrayData = {
+    val sims = cents.vecs.map(cosine(v, _))
+    val order = cents.ids.indices.sortWith { (i, j) =>
+      val c = SQLOrderingUtil.compareDoubles(sims(i), sims(j))
+      c > 0 || (c == 0 && cents.ids(i) < cents.ids(j))
+    }
+    new GenericArrayData(order.take(n).map(cents.ids(_)).toArray)
+  }
 }
 
 /** [[CentroidKernels.nearest]] over an array<double> vector column. */
@@ -83,8 +95,21 @@ case class NearestCentroidId(child: Expression, cents: CentroidKernels.Cents)
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
-/** Column wrapper (the [[sig]] idiom). */
+/** [[CentroidKernels.nearestN]] over an array<double> vector column. */
+case class NearestCentroidIds(child: Expression, cents: CentroidKernels.Cents, n: Int)
+    extends UnaryExpression with CodegenFallback {
+  override def nullIntolerant: Boolean = true
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def prettyName: String = "nearest_centroid_ids"
+  override def nullSafeEval(v: Any): Any =
+    CentroidKernels.nearestN(v.asInstanceOf[ArrayData], cents, n)
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+}
+
+/** Column wrappers (the [[sig]] idiom). */
 object centroid {
   def nearestCell(vec: Column, cents: CentroidKernels.Cents): Column =
     Bridge.column(NearestCentroidId(Bridge.expression(vec.cast("array<double>")), cents))
+  def nearestCells(vec: Column, cents: CentroidKernels.Cents, n: Int): Column =
+    Bridge.column(NearestCentroidIds(Bridge.expression(vec.cast("array<double>")), cents, n))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.graft.{Bridge, TypedInputs}
 import org.apache.spark.sql.types._
 
 /**
@@ -155,9 +155,18 @@ object PqKernels extends Serializable {
   def assignSub(sub: Int, sv: ArrayData, cb: Cb): Int = argmin(sv, 0, cb, sub)
 }
 
+/** The kernels' declared inputs: codes are array<tinyint> (what
+  * [[PqEncode]] writes), vectors array<double>, the subspace an int —
+  * a misuse fails at analysis, not inside a task. */
+private object PqTypes {
+  val Vec: Seq[DataType] = Seq(ArrayType(DoubleType))
+  val Codes: Seq[DataType] = Seq(ArrayType(ByteType))
+}
+
 /** [[PqKernels.encode]] over an array<double> column. */
 case class PqEncode(child: Expression, cb: PqKernels.Cb)
-    extends UnaryExpression {
+    extends UnaryExpression with TypedInputs {
+  override def acceptedTypes: Seq[Seq[DataType]] = Seq(PqTypes.Vec)
   override def nullIntolerant: Boolean = true
   override def dataType: DataType = ArrayType(ByteType, containsNull = false)
   override def prettyName: String = "pq_encode"
@@ -172,7 +181,8 @@ case class PqEncode(child: Expression, cb: PqKernels.Cb)
 
 /** [[PqKernels.encodeResidual]] over (vec, cell) array<double> columns. */
 case class PqEncodeResidual(left: Expression, right: Expression, cb: PqKernels.Cb)
-    extends BinaryExpression {
+    extends BinaryExpression with TypedInputs {
+  override def acceptedTypes: Seq[Seq[DataType]] = Seq(PqTypes.Vec, PqTypes.Vec)
   override def nullIntolerant: Boolean = true
   override def dataType: DataType = ArrayType(ByteType, containsNull = false)
   override def prettyName: String = "pq_encode_residual"
@@ -189,7 +199,8 @@ case class PqEncodeResidual(left: Expression, right: Expression, cb: PqKernels.C
 
 /** [[PqKernels.reconstruct]] over an array<tinyint> codes column. */
 case class PqReconstruct(child: Expression, cb: PqKernels.Cb)
-    extends UnaryExpression {
+    extends UnaryExpression with TypedInputs {
+  override def acceptedTypes: Seq[Seq[DataType]] = Seq(PqTypes.Codes)
   override def nullIntolerant: Boolean = true
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def prettyName: String = "pq_reconstruct"
@@ -204,7 +215,8 @@ case class PqReconstruct(child: Expression, cb: PqKernels.Cb)
 
 /** [[PqKernels.reconstructAdd]] over (codes, cell) columns. */
 case class PqReconstructAdd(left: Expression, right: Expression, cb: PqKernels.Cb)
-    extends BinaryExpression {
+    extends BinaryExpression with TypedInputs {
+  override def acceptedTypes: Seq[Seq[DataType]] = Seq(PqTypes.Codes, PqTypes.Vec)
   override def nullIntolerant: Boolean = true
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def prettyName: String = "pq_reconstruct_add"
@@ -223,7 +235,8 @@ case class PqReconstructAdd(left: Expression, right: Expression, cb: PqKernels.C
 /** [[PqKernels.assignSub]] over (sub int, sv array<double>) — the Lloyd
   * assignment expression. */
 case class PqAssignSub(left: Expression, right: Expression, cb: PqKernels.Cb)
-    extends BinaryExpression {
+    extends BinaryExpression with TypedInputs {
+  override def acceptedTypes: Seq[Seq[DataType]] = Seq(Seq(IntegerType), PqTypes.Vec)
   override def nullIntolerant: Boolean = true
   override def dataType: DataType = IntegerType
   override def prettyName: String = "pq_assign_sub"

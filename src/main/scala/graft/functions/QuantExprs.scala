@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.graft.{Bridge, TypedInputs}
 import org.apache.spark.sql.types._
 
 /**
@@ -129,9 +129,19 @@ object QuantKernels extends Serializable {
   }
 }
 
+/** The kernels' declared inputs: a misuse (an int or decimal scale, a
+  * codes column of another element type) fails at analysis with
+  * Spark's DATATYPE_MISMATCH instead of a ClassCastException or a
+  * codegen error at run time. */
+private object QuantTypes {
+  val Vec: Seq[DataType] = Seq(ArrayType(DoubleType))
+  val Codes: Seq[DataType] = Seq(ArrayType(ByteType), ArrayType(IntegerType))
+}
+
 /** [[QuantKernels.maxAbs]] over an array<double> column (nullable out —
   * wrap in coalesce for the 0.0-on-empty contract). */
-case class VecMaxAbs(child: Expression) extends UnaryExpression {
+case class VecMaxAbs(child: Expression) extends UnaryExpression with TypedInputs {
+  override def acceptedTypes: Seq[Seq[DataType]] = Seq(QuantTypes.Vec)
   override def nullIntolerant: Boolean = true
   override def nullable: Boolean = true
   override def dataType: DataType = DoubleType
@@ -150,7 +160,9 @@ case class VecMaxAbs(child: Expression) extends UnaryExpression {
 }
 
 /** [[QuantKernels.quantizeInt8]] over (vec, scale). */
-case class QuantizeInt8(left: Expression, right: Expression) extends BinaryExpression {
+case class QuantizeInt8(left: Expression, right: Expression)
+    extends BinaryExpression with TypedInputs {
+  override def acceptedTypes: Seq[Seq[DataType]] = Seq(QuantTypes.Vec, Seq(DoubleType))
   override def nullIntolerant: Boolean = true
   override def dataType: DataType = ArrayType(IntegerType, containsNull = true)
   override def prettyName: String = "quantize_int8"
@@ -163,7 +175,9 @@ case class QuantizeInt8(left: Expression, right: Expression) extends BinaryExpre
 }
 
 /** [[QuantKernels.quantizeTiny]] over (vec, scale). */
-case class QuantizeTiny(left: Expression, right: Expression) extends BinaryExpression {
+case class QuantizeTiny(left: Expression, right: Expression)
+    extends BinaryExpression with TypedInputs {
+  override def acceptedTypes: Seq[Seq[DataType]] = Seq(QuantTypes.Vec, Seq(DoubleType))
   override def nullIntolerant: Boolean = true
   override def dataType: DataType = ArrayType(ByteType, containsNull = true)
   override def prettyName: String = "quantize_tiny"
@@ -177,7 +191,9 @@ case class QuantizeTiny(left: Expression, right: Expression) extends BinaryExpre
 
 /** [[QuantKernels.dequantize]] over (codes, scale); dispatches on the
   * codes element type (tinyint or int). */
-case class DequantizeInt8(left: Expression, right: Expression) extends BinaryExpression {
+case class DequantizeInt8(left: Expression, right: Expression)
+    extends BinaryExpression with TypedInputs {
+  override def acceptedTypes: Seq[Seq[DataType]] = Seq(QuantTypes.Codes, Seq(DoubleType))
   override def nullIntolerant: Boolean = true
   override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
   override def prettyName: String = "dequantize_int8"
@@ -197,7 +213,9 @@ case class DequantizeInt8(left: Expression, right: Expression) extends BinaryExp
 /** [[QuantKernels.maxAbsError]] over (vec, codes, scale) (nullable out —
   * wrap in coalesce for the 0.0-on-empty contract). */
 case class QuantMaxAbsError(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression {
+    extends TernaryExpression with TypedInputs {
+  override def acceptedTypes: Seq[Seq[DataType]] =
+    Seq(QuantTypes.Vec, QuantTypes.Codes, Seq(DoubleType))
   override def nullIntolerant: Boolean = true
   override def nullable: Boolean = true
   override def dataType: DataType = DoubleType

@@ -605,42 +605,8 @@ object DedupOps {
         n
       }.getOrElse(DefaultCcDriverMaxEdges)
     if (longIds && maxDriverEdges > 0 &&
-        edges.limit(maxDriverEdges.toInt + 1).count() <= maxDriverEdges) {
-      val parent = new java.util.HashMap[Long, Long]()
-      def find(x0: Long): Long = {
-        var x = x0
-        var p = parent.get(x)
-        while (p != x) { // path halving
-          val gp = parent.get(p)
-          parent.put(x, gp)
-          x = gp
-          p = parent.get(x)
-        }
-        x
-      }
-      edges.collect().foreach { r =>
-        val a = r.getLong(0); val b = r.getLong(1)
-        if (!parent.containsKey(a)) parent.put(a, a)
-        if (!parent.containsKey(b)) parent.put(b, b)
-        val ra = find(a); val rb = find(b)
-        // union by MIN root: the component label must be the smallest
-        // member id, exactly the loop's min-label fixpoint
-        if (ra != rb) {
-          if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb)
-        }
-      }
-      val out = new Array[Row](parent.size())
-      val it = parent.keySet().iterator()
-      var i = 0
-      while (it.hasNext) { val id = it.next(); out(i) = Row(id, find(id)); i += 1 }
-      val spark = edges.sparkSession
-      return spark.createDataFrame(
-        spark.sparkContext.parallelize(out.toIndexedSeq,
-          math.max(1, spark.sparkContext.defaultParallelism / 4)),
-        StructType(Seq(
-          StructField("id", LongType, nullable = false),
-          StructField("component", LongType, nullable = false))))
-    }
+        edges.limit(maxDriverEdges.toInt + 1).count() <= maxDriverEdges)
+      return driverComponents(edges)
     var labels = edges.select(col("src").as("id")).distinct()
       .withColumn("component", col("id")).localCheckpoint(true)
     var done = labels.isEmpty
@@ -681,6 +647,63 @@ object DedupOps {
         s"connectedComponents did not converge within $maxIter rounds; " +
           "refusing to return partially-propagated (wrong) duplicate groups")
     labels
+  }
+
+  /** The driver closure of [[connectedComponents]] over a bounded,
+    * symmetric, distinct long edge set. Each partition packs its
+    * `src <= dst` pairs (one direction covers every edge and node) into
+    * one primitive long array — 16 bytes an edge, no `Row` per edge —
+    * and ids remap to dense indexes of their sorted order, so the
+    * union-find runs over an `Array[Int]` with path halving. Uniting
+    * under the smaller index unites under the smaller id: every root
+    * is its component's minimum member, the loop's min-label fixpoint. */
+  private def driverComponents(edges: DataFrame): DataFrame = {
+    val packed = edges.queryExecution.toRdd.mapPartitions { rows =>
+      val b = Array.newBuilder[Long]
+      rows.foreach { r =>
+        require(!r.isNullAt(0) && !r.isNullAt(1), "connectedComponents: null id in a pair")
+        val a = r.getLong(0); val d = r.getLong(1)
+        if (a <= d) { b += a; b += d }
+      }
+      Iterator.single(b.result())
+    }.collect()
+    val all = Array.concat(packed.toIndexedSeq: _*)
+    java.util.Arrays.sort(all)
+    var n = 0
+    for (i <- all.indices if i == 0 || all(i) != all(i - 1)) { all(n) = all(i); n += 1 }
+    val ids = java.util.Arrays.copyOf(all, n)
+    val parent = Array.tabulate(n)(identity)
+    def find(x0: Int): Int = {
+      var x = x0
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    packed.foreach { p =>
+      var j = 0
+      while (j < p.length) {
+        val ra = find(java.util.Arrays.binarySearch(ids, p(j)))
+        val rb = find(java.util.Arrays.binarySearch(ids, p(j + 1)))
+        if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+        j += 2
+      }
+    }
+    // (id, component) pairs ship as a few primitive chunks, not n Rows.
+    val spark = edges.sparkSession
+    val slices = math.max(1, spark.sparkContext.defaultParallelism / 4)
+    val per = math.max(1, (n + slices - 1) / slices)
+    val chunks = (0 until n by per).map { s =>
+      val c = new Array[Long](2 * (math.min(n, s + per) - s))
+      for (i <- s until math.min(n, s + per)) {
+        c(2 * (i - s)) = ids(i); c(2 * (i - s) + 1) = ids(find(i))
+      }
+      c
+    }
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(chunks, math.max(1, chunks.size))
+        .flatMap(c => Iterator.range(0, c.length, 2).map(j => Row(c(j), c(j + 1)))),
+      StructType(Seq(
+        StructField("id", LongType, nullable = false),
+        StructField("component", LongType, nullable = false))))
   }
 
   /** Session-conf override for the driver union-find cutoff of

@@ -327,19 +327,27 @@ object IvfAnn {
     * bounded (≤ |queries| × nprobe ids; queries are the small side of
     * this serving path by construction). Exposed so callers can turn
     * the probe set into file pruning ([[annSearchQuantizedStored]]) or
-    * audit it. */
+    * audit it.
+    *
+    * The nlist centroids come to the driver once (the one job: their
+    * scan); each query row then picks its own top-nprobe cells map-side
+    * ([[graft.functions.CentroidKernels.nearestN]]) in the probe's
+    * window order — descending cosine under Spark's double ordering
+    * (NaN first), ties to the lower `cell_id` — so a local query frame
+    * adds no job and no shuffle. A NULL query vector ties every cell
+    * at a null similarity, which that order breaks to the nprobe
+    * lowest ids. Rows are independent: two rows sharing an `idCol`
+    * value each contribute their own nprobe cells (a superset of what
+    * the probe's per-id window keeps). */
   def probedCellIds(queries: DataFrame, cells: DataFrame, idCol: String,
-                    vecCol: String, nprobe: Int): Seq[Long] =
-    queries.select(col(idCol).as("query_id"), col(vecCol).cast("array<double>").as("qv"))
-      .crossJoin(broadcast(cells))
-      .select(col("query_id"), col("cell_id"),
-        graft.functions.vector.cosineSim(col("qv"), col("cell_vec")).as("csim"))
-      .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy("query_id")
-          .orderBy(desc("csim"), col("cell_id"))))
-      .filter(col("rn") <= nprobe)
-      .select("cell_id").distinct()
-      .collect().map(_.getLong(0)).toSeq
+                    vecCol: String, nprobe: Int): Seq[Long] = {
+    val cents = centroidMatrix(cells)
+    if (cents.ids.isEmpty || nprobe <= 0) Nil
+    else queries.select(graft.functions.centroid.nearestCells(col(vecCol), cents, nprobe))
+      .collect().iterator
+      .flatMap(r => if (r.isNullAt(0)) cents.ids.take(nprobe).toSeq else r.getSeq[Long](0))
+      .distinct.toSeq
+  }
 
   /**
    * ANN over the PERSISTED index: resolve the probed cells, open only

@@ -327,7 +327,7 @@ object PqStore {
     // Derive the stored id type from the table's own schema: a store
     // written with string ids must present string ids in the empty-read
     // fallback too — assuming long here mis-typed the probe for any
-    // non-long idCol. Memoized per generation (TableSink.storedColType).
+    // non-long idCol (TableSink.storedColType; footer memoized per file).
     val idType = graft.sources.TableSink.storedColType(spark, dir, idCol)
     val like = spark.range(0).select(lit(0L).as("cell"),
       lit(null).cast(idType).as(idCol),

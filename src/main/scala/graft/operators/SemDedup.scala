@@ -202,8 +202,7 @@ object SemDedupStore {
 
   /** The stored member table's id type — the store keeps the caller's
     * id verbatim, so every empty-read `like` frame must present THAT
-    * type, not an assumed long ([[TableSink.storedColType]], memoized
-    * per generation). */
+    * type, not an assumed long ([[TableSink.storedColType]]). */
   private def storedIdType(spark: SparkSession,
                            dir: String): org.apache.spark.sql.types.DataType =
     TableSink.storedColType(spark, membersDir(dir), "id")
@@ -254,9 +253,9 @@ object SemDedupStore {
     * .IndexMeta]].cellsPtr; table and centroids swap in ONE manifest
     * commit), falling back to `cells/` for never-rebuilt stores. */
   def readCentroids(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(
+    graft.sources.StoreRead.parquet(spark, Seq(
       graft.sources.IndexMeta.cellsPtr(membersDir(dir))
-        .fold(cellsDir(dir))(p => s"$dir/$p"))
+        .fold(cellsDir(dir))(p => s"$dir/$p")))
 
   /**
    * Batch verdicts against the standing members — exactly

@@ -81,9 +81,14 @@ object Bm25 {
     val scan = if (pruneTermScan) {
       // Driver-bounded collect (query batches are tiny by contract);
       // the literal in-list reaches the parquet reader as a pushed
-      // predicate → row-group pruning on a term-sorted index.
-      val terms = qterms0.select("term").distinct().collect().map(_.getString(0))
-      idx.where(col("term").isin(terms.toIndexedSeq: _*))
+      // predicate → row-group pruning on a term-sorted index. Each
+      // row's distinct terms come back as one array and de-duplicate
+      // on the driver: no explode + distinct shuffle, and a local query
+      // frame runs no job at all. (A null term never matches `isin`.)
+      val terms = queries.select(array_distinct(toks(col(qtextCol)))).collect()
+        .iterator.filterNot(_.isNullAt(0)).flatMap(_.getSeq[String](0))
+        .filter(_ != null).distinct.toIndexedSeq
+      idx.where(col("term").isin(terms: _*))
     } else idx
     val matched = scan
       .where(col("df").cast("double") / col("n_docs") <= maxDfFrac)

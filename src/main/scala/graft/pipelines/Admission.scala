@@ -616,7 +616,8 @@ object Admission {
       graft.sources.BucketedParts.readMeta(s"${spanDir(storeDir)}/_meta",
         "admission span index"),
       "admission span index", spanDir(storeDir))
-    val dfs = parts.map(p => spark.read.parquet(s"${spanDir(storeDir)}/$p"))
+    val dfs = parts.map(p =>
+      graft.sources.StoreRead.parquet(spark, Seq(s"${spanDir(storeDir)}/$p")))
     if (dfs.size == 1) dfs.head
     else SpanDedup.mergeSpanIndexesAll(dfs).localCheckpoint(true)
   }
@@ -918,7 +919,7 @@ object Admission {
     if (!committed)
       computeVerdicts(spark, storeDir, batch, idCol, textCol, cfg)
         .write.mode("overwrite").parquet(vd)
-    val out = spark.read.parquet(vd)
+    val out = graft.sources.StoreRead.parquet(spark, Seq(vd))
     val grown = batch.select(col(idCol), col(textCol))
       .join(out.filter(col("verdict") === "admitted").select(idCol), idCol)
     absorb(spark, storeDir, grown, idCol, textCol, cfg, f"part_b$batchId%d")

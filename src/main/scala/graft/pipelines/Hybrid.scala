@@ -66,9 +66,9 @@ object Hybrid {
 
   /** The stored ANN leg's id type — the store keeps the caller's id
     * verbatim, so every empty-read `like` frame must present THAT
-    * type, not an assumed long ([[TableSink.storedColType]], memoized
-    * per generation so the serving path pays no per-query footer
-    * read). */
+    * type, not an assumed long ([[TableSink.storedColType]]; the
+    * footer read behind it is memoized per data file, so the serving
+    * path pays no per-query footer read). */
   private def storedIdType(spark: SparkSession,
                            storeDir: String): org.apache.spark.sql.types.DataType =
     TableSink.storedColType(spark, annDir(storeDir), "id")
@@ -94,10 +94,10 @@ object Hybrid {
     * search must carry its own copy. */
   def readCells(spark: SparkSession, storeDir: String,
                 tag: Option[String] = None): DataFrame =
-    spark.read.parquet(tag.fold(
+    graft.sources.StoreRead.parquet(spark, Seq(tag.fold(
       graft.sources.IndexMeta.cellsPtr(annDir(storeDir))
         .fold(cellsDir(storeDir))(p => s"$storeDir/$p")
-    )(t => cellsSnapDir(storeDir, t)))
+    )(t => cellsSnapDir(storeDir, t))))
 
   private def cellsSnapDir(storeDir: String, tag: String) =
     s"$storeDir/cells_snapshots/$tag"

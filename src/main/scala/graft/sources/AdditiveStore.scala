@@ -45,7 +45,7 @@ final case class AdditiveStore(what: String, relations: Seq[String],
   /** One relation over `names` as a single multi-path parquet scan. */
   def read(spark: SparkSession, dir: String, rel: String,
            names: Seq[String]): DataFrame =
-    spark.read.parquet(names.map(path(dir, rel, _)): _*)
+    StoreRead.parquet(spark, names.map(path(dir, rel, _)))
 
   /** One relation over `names` as per-part scans unioned by name — the
     * form bucket-partitioned parts need ([[BucketedParts.readParts]]). */

@@ -100,7 +100,7 @@ object BucketedParts {
   /** Per-part read reconciling the partitioned and plain-empty layouts
     * (unionByName aligns the column order). */
   def readParts(spark: SparkSession, root: String, names: Seq[String]): DataFrame =
-    names.map(n => spark.read.parquet(s"$root/$n")).reduce(_ unionByName _)
+    names.map(n => StoreRead.parquet(spark, Seq(s"$root/$n"))).reduce(_ unionByName _)
 
   /** The `_meta` key=value pin every bucketed store writes at init
     * (LAST inside the init callback — a crash before it leaves neither

@@ -208,7 +208,7 @@ object StoreCheck {
     val entries = entryLines(s"$dir/_manifests/$mfName")._1
       .map { case (b, rel) => (b, s"$dir/$rel") }
     val perBucket = entries.map { case (b, path) =>
-      spark.read.parquet(path).select(hashCols.map(col): _*)
+      StoreRead.parquet(spark, Seq(path)).select(hashCols.map(col): _*)
         .withColumn("__stored_bucket", lit(b))
     }
     val all = perBucket.reduceOption(_ unionByName _)

@@ -189,7 +189,7 @@ object TableSink {
     val paths = currentPaths(dir, currentManifest(dir))
     if (paths.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], like.schema)
-    else spark.read.option("mergeSchema", "true").parquet(paths: _*)
+    else StoreRead.parquet(spark, paths, merge = true)
   }
 
   /**
@@ -331,7 +331,7 @@ object TableSink {
     require(paths.nonEmpty,
       s"table at '$dir' holds no data — the next upsert pins the count " +
         "directly via its numBuckets argument; nothing to migrate")
-    val table = spark.read.option("mergeSchema", "true").parquet(paths: _*)
+    val table = StoreRead.parquet(spark, paths, merge = true)
     overwrite(spark, dir, table, keys, newBuckets,
       layoutCol = cur.get.layoutCol, meta = cur.get.meta)
   }
@@ -370,44 +370,26 @@ object TableSink {
       case None => Set.empty
     }
 
-  /** Schema of the stored table (one parquet-footer read of one
-    * bucket file, driver-side) — lets readers derive stored column
-    * TYPES instead of assuming them (an id column written as string
-    * must be probed as string: `hash()` and joins are type-sensitive).
-    * None when the table is absent or holds no data yet. */
+  /** Schema of the stored table (the footer of one bucket file,
+    * driver-side and memoized per file by [[StoreRead]]) — lets readers
+    * derive stored column TYPES instead of assuming them (an id column
+    * written as string must be probed as string: `hash()` and joins are
+    * type-sensitive). None when the table is absent or holds no data
+    * yet. */
   def storedSchemaOf(spark: SparkSession, dir: String): Option[org.apache.spark.sql.types.StructType] =
     currentManifest(dir).flatMap { m =>
       m.paths.values.toSeq.sorted.headOption
-        .map(rel => spark.read.parquet(s"$dir/$rel").schema)
+        .map(rel => StoreRead.schema(spark, Seq(s"$dir/$rel")))
     }
 
-  // (dir, column) → (generation, type): serving hot paths (Hybrid
-  // .search) type their empty-read `like` frames per query, and the
-  // footer read behind storedSchemaOf is invariant within one
-  // generation. The generation lives in the VALUE, not the key, so a
-  // long-lived streaming driver committing per micro-batch replaces one
-  // entry instead of accumulating a dead entry per generation forever —
-  // the map stays O(tables × probed columns).
-  private val colTypeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String),
-      (Long, org.apache.spark.sql.types.DataType)]()
-
   /** The stored type of one column (falls back to `LongType` for an
-    * absent/empty table) — [[storedSchemaOf]] memoized per table
-    * GENERATION, so repeated probes of an unchanged store read no
-    * footer. The single shared implementation behind every empty-read
-    * `like`-frame typing (the PqStore.search string-id mistyping,
-    * fixed once). */
+    * absent/empty table) — the single shared implementation behind
+    * every empty-read `like`-frame typing (the PqStore.search string-id
+    * mistyping, fixed once). */
   def storedColType(spark: SparkSession, dir: String,
-                    colName: String): org.apache.spark.sql.types.DataType = {
-    val seq = currentSeq(dir).getOrElse(-1L)
-    val key = (fs.canonical(dir), colName)
-    colTypeCache.compute(key, (_, cached) =>
-      if (cached != null && cached._1 == seq) cached
-      else (seq, storedSchemaOf(spark, dir)
-        .flatMap(_.find(_.name == colName).map(_.dataType))
-        .getOrElse(org.apache.spark.sql.types.LongType)))._2
-  }
+                    colName: String): org.apache.spark.sql.types.DataType =
+    storedSchemaOf(spark, dir).flatMap(_.find(_.name == colName).map(_.dataType))
+      .getOrElse(org.apache.spark.sql.types.LongType)
 
   /** Read ONLY the listed buckets' files — file-level pruning for
     * value-addressable layouts: the scan never opens (or even lists
@@ -423,7 +405,7 @@ object TableSink {
     }
     if (paths.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], like.schema)
-    else spark.read.option("mergeSchema", "true").parquet(paths: _*)
+    else StoreRead.parquet(spark, paths, merge = true)
   }
 
   /**
@@ -504,8 +486,7 @@ object TableSink {
           // would be rewritten WITHOUT it — silent erasure of other
           // rows' values. Refuse: widen the batch, or overwrite().
           // (Footer-only pass; the data read below pins the hint.)
-          val onDisk = spark.read.option("mergeSchema", "true")
-            .parquet(dirtyPaths: _*).schema.fieldNames
+          val onDisk = StoreRead.schema(spark, dirtyPaths, merge = true).fieldNames
           val lost = onDisk.filterNot(sh.fieldNames.contains)
           require(lost.isEmpty,
             s"dirty buckets of '$dir' carry column(s) ${lost.mkString(", ")} " +
@@ -514,8 +495,7 @@ object TableSink {
               "co-resident row. Widen the batch to the table schema, or " +
               "use overwrite() for a deliberate schema change.")
           spark.read.schema(sh).parquet(dirtyPaths: _*)
-        case None =>
-          spark.read.option("mergeSchema", "true").parquet(dirtyPaths: _*)
+        case None => StoreRead.parquet(spark, dirtyPaths, merge = true)
       }
 
     // One job writes every dirty bucket: partitionBy splits them into
@@ -596,7 +576,7 @@ object TableSink {
         "(every bucket was emptied before the tag) — there is no schema " +
         "to infer; read the live table with TableSink.read if you need " +
         "an empty frame of the right shape")
-    spark.read.option("mergeSchema", "true").parquet(paths: _*)
+    StoreRead.parquet(spark, paths, merge = true)
   }
 
   /** Unpin `tag`; the generation becomes reclaimable at the next commit's

@@ -455,6 +455,29 @@ class CurationSpec extends AnyFunSuite with SparkSpec {
     } finally spark.conf.unset(key)
   }
 
+  test("connectedComponents: the driver union-find's labels equal the distributed loop's on a random graph") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(17)
+    // Sparse ids spanning negative and large longs; some nodes only ever
+    // appear in a self-loop (isolated), edges repeat in both directions.
+    val ids = Vector.fill(120)(rnd.nextLong() >> rnd.nextInt(40)).distinct
+    def pick = ids(rnd.nextInt(ids.size))
+    val edges = Seq.fill(90)((pick, pick))
+    val loops = ids.take(15).map(i => (i, i))
+    val pairs = (edges ++ loops ++ edges.take(20) ++ edges.take(20).map(_.swap))
+      .toDF("id_a", "id_b").repartition(3)
+    def labels() = graft.operators.DedupOps.connectedComponents(pairs, "id_a", "id_b")
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val driver = labels()
+    val key = graft.operators.DedupOps.CcDriverMaxEdgesConf
+    spark.conf.set(key, "0")
+    val loop = try labels() finally spark.conf.unset(key)
+    assert(driver == loop)
+    assert(driver.keySet == (edges ++ loops).flatMap(e => Seq(e._1, e._2)).toSet)
+    assert(driver.forall { case (id, c) => c <= id && driver(c) == c })
+    assert(ids.take(15).forall(i => driver(i) == i || edges.exists(e => e._1 == i || e._2 == i)))
+  }
+
   test("canonicalizeUrl: two crawls of one page collide; distinct pages do not") {
     import spark.implicits._
     val urls = Seq(

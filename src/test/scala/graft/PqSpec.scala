@@ -62,4 +62,26 @@ class PqSpec extends AnyFunSuite with SparkSpec {
     val recall = hit.toDouble / exact.count()
     assert(recall >= 0.8, s"refined recall $recall")
   }
+
+  // Misuse fails at analysis (ExpectsInputTypes), not inside a task.
+  private val tinyCb = Array(Array(Array(0.0), Array(1.0)), Array(Array(0.0), Array(1.0)))
+
+  private def refused(c: org.apache.spark.sql.Column, what: String): Unit = {
+    import spark.implicits._
+    val df = Seq((Seq(1, 0), 1L, Seq(0.0, 1.0))).toDF("icodes", "lsub", "v")
+    val e = intercept[org.apache.spark.sql.AnalysisException](df.select(c).collect())
+    assert(e.getMessage.contains("DATATYPE_MISMATCH"), s"$what: ${e.getMessage}")
+  }
+
+  test("pq reconstruct with int codes fails at analysis") {
+    refused(graft.functions.pq.reconstruct(col("icodes"), tinyCb), "int codes")
+  }
+
+  test("pq reconstructAdd with int codes fails at analysis") {
+    refused(graft.functions.pq.reconstructAdd(col("icodes"), col("v"), tinyCb), "int codes")
+  }
+
+  test("pq assignSub with a bigint subspace fails at analysis") {
+    refused(graft.functions.pq.assignSub(col("lsub"), col("v"), tinyCb), "bigint subspace")
+  }
 }

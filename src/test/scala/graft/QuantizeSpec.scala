@@ -51,4 +51,35 @@ class QuantizeSpec extends AnyFunSuite with SparkSpec {
     assert(q.collect().map(_.toString).sorted.sameElements(
       q.collect().map(_.toString).sorted))
   }
+
+  // Misuse fails at analysis (ExpectsInputTypes), not inside a task.
+  private def refused(c: org.apache.spark.sql.Column, what: String): Unit = {
+    import spark.implicits._
+    val df = Seq((Seq(1.0, -2.0), 3, BigDecimal(1), Seq(1L, 2L), Seq(1, 2)))
+      .toDF("v", "iscale", "dscale", "lcodes", "icodes")
+    val e = intercept[org.apache.spark.sql.AnalysisException](df.select(c).collect())
+    assert(e.getMessage.contains("DATATYPE_MISMATCH"), s"$what: ${e.getMessage}")
+  }
+
+  test("quantizeInt8 with an int scale fails at analysis") {
+    refused(graft.functions.quant.quantizeInt8(col("v"), col("iscale")), "int scale")
+  }
+
+  test("quantizeTiny with a decimal scale fails at analysis") {
+    refused(graft.functions.quant.quantizeTiny(col("v"), col("dscale")), "decimal scale")
+  }
+
+  test("dequantize with bigint codes fails at analysis") {
+    refused(graft.functions.quant.dequantize(col("lcodes"), lit(1.0)), "bigint codes")
+  }
+
+  test("maxAbsError with an int scale fails at analysis; int and tinyint codes pass") {
+    refused(graft.functions.quant.maxAbsError(col("v"), col("icodes"), col("iscale")), "int scale")
+    import spark.implicits._
+    val ok = Seq((Seq(1.0, -2.0), Seq(1, 2), 0.5)).toDF("v", "icodes", "scale")
+      .select(graft.functions.quant.dequantize(col("icodes"), col("scale")),
+        graft.functions.quant.dequantize(col("icodes").cast("array<tinyint>"), col("scale")))
+      .collect().head
+    assert(ok.getSeq[Double](0) == Seq(0.5, 1.0) && ok.getSeq[Double](1) == Seq(0.5, 1.0))
+  }
 }
