@@ -1,5 +1,6 @@
 package graft
 
+import java.util.concurrent.{Callable, ExecutionException, Executors}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Contract smoke: entry() returns rows; every query runs at sf0.001 and
@@ -11,9 +12,20 @@ class EntrySpec extends AnyFunSuite with SparkSpec {
   }
 
   test("all queries execute at sf0.001") {
-    SparkEntry.queries.foreach { case (name, fn) =>
-      withClue(name) { fn(spark, sf()).write.format("noop").mode("overwrite").save() }
-    }
+    // Queries are independent: run four at a time on the shared session,
+    // as Verify does, and name every query that fails.
+    val pool = Executors.newFixedThreadPool(4)
+    val failed = try {
+      SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+        name -> pool.submit(new Callable[Unit] {
+          def call(): Unit = fn(spark, sf()).write.format("noop").mode("overwrite").save()
+        })
+      }.flatMap { case (name, run) =>
+        try { run.get(); None }
+        catch { case e: ExecutionException => Some(s"$name: ${e.getCause}") }
+      }
+    } finally pool.shutdown()
+    assert(failed.isEmpty, failed.mkString("queries failed:\n", "\n", ""))
   }
 
   test("oracleSql keys ⊆ queries keys") {

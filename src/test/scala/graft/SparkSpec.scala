@@ -16,5 +16,10 @@ object SparkSpec {
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
+    // One JVM runs every suite, and the suites re-plan the same store and
+    // pipeline code many times over. Spark's default codegen cache (100
+    // classes) evicts and recompiles that code; a larger one compiles it
+    // once per run.
+    .config("spark.sql.codegen.cache.maxEntries", "10000")
     .getOrCreate()
 }
