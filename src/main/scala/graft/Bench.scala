@@ -279,9 +279,13 @@ object Bench {
     * numbers round over round while isolated medians stayed flat.
     * Unpersisting every persistent RDD and clearing the SQL cache after
     * each timed run (untimed: outside the clock) starts every
-    * measurement from an empty block manager. */
-  private def sweep(spark: SparkSession): Unit = {
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    * measurement from an empty block manager. `keep` spares a harness's
+    * own pinned RDDs ([[ScaleCurve]]): a local checkpoint is not
+    * recomputable. */
+  private[graft] def sweep(spark: SparkSession, keep: collection.Set[Int] = Set.empty): Unit = {
+    spark.sparkContext.getPersistentRDDs
+      .filter { case (id, _) => !keep.contains(id) }
+      .values.foreach(_.unpersist(blocking = true))
     spark.catalog.clearCache()
   }
 

@@ -35,18 +35,6 @@ import org.apache.spark.sql.functions._
  */
 object ScaleCurve {
 
-  /** Inter-measurement sweep SPARING the harness's own pinned frames
-    * (`keep`): the first run of this harness unpersisted its fixed
-    * query-batch checkpoints mid-flight and every later read died with
-    * CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND — a local checkpoint is not
-    * recomputable by design. */
-  private def sweep(spark: SparkSession, keep: collection.Set[Int]): Unit = {
-    spark.sparkContext.getPersistentRDDs
-      .filter { case (id, _) => !keep.contains(id) }
-      .values.foreach(_.unpersist(blocking = true))
-    spark.catalog.clearCache()
-  }
-
   private def timeOnce(body: => Unit): Double = {
     val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
   }
@@ -56,7 +44,7 @@ object ScaleCurve {
                         df: () => DataFrame): Double = {
     val ts = (1 to 3).map { _ =>
       val t = timeOnce(df().write.format("noop").mode("overwrite").save())
-      sweep(spark, keep); t
+      Bench.sweep(spark, keep); t
     }.sorted
     ts(1)
   }
@@ -133,14 +121,14 @@ object ScaleCurve {
       val vecs = pin(grow(baseVecs, m, "vec_id", None)
         .repartition(cpus.toInt))
       val nVecs = vecs.count()
-      sweep(spark, pinned)
+      Bench.sweep(spark, pinned)
 
       def run(store: String, dirAs: Option[String] = None)(
           init: String => Unit)(
           serve: String => DataFrame)(twin: () => DataFrame): Unit =
         if (only.forall(_.contains(store))) {
           val dir = dirFor(dirAs.getOrElse(store), m)
-          val iS = timeOnce(init(dir)); sweep(spark, pinned)
+          val iS = timeOnce(init(dir)); Bench.sweep(spark, pinned)
           val sS = timeServe(spark, pinned, () => serve(dir))
           val tS = timeServe(spark, pinned, twin)
           record(store, m, if (store == "semdedup" || store == "ivf") nVecs
@@ -256,7 +244,7 @@ object ScaleCurve {
       // Scale teardown: this scale's pins (corpus/vecs/cents/cells)
       // release; the cross-scale query batches stay.
       pinned.filterInPlace(globalPinned.contains)
-      sweep(spark, pinned)
+      Bench.sweep(spark, pinned)
     }
 
     try java.nio.file.Files.writeString(

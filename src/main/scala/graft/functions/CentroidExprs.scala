@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, SQLOrderingUtil}
@@ -68,9 +69,10 @@ object CentroidKernels extends Serializable {
 
   /** The `n` most cosine-similar centroid ids, best first: descending
     * Spark double ordering (NaN greatest), ties to the lower id — the
-    * order of a `row_number()` window over (desc(sim), cent_id). */
+    * order of a `row_number()` window over (desc(sim), cent_id), under
+    * which a NULL vector's null similarities tie: it gets the lowest ids. */
   def nearestN(v: ArrayData, cents: Cents, n: Int): ArrayData = {
-    val sims = cents.vecs.map(cosine(v, _))
+    val sims = if (v == null) new Array[Double](cents.ids.length) else cents.vecs.map(cosine(v, _))
     val order = cents.ids.indices.sortWith { (i, j) =>
       val c = SQLOrderingUtil.compareDoubles(sims(i), sims(j))
       c > 0 || (c == 0 && cents.ids(i) < cents.ids(j))
@@ -98,11 +100,11 @@ case class NearestCentroidId(child: Expression, cents: CentroidKernels.Cents)
 /** [[CentroidKernels.nearestN]] over an array<double> vector column. */
 case class NearestCentroidIds(child: Expression, cents: CentroidKernels.Cents, n: Int)
     extends UnaryExpression with CodegenFallback {
-  override def nullIntolerant: Boolean = true
+  override def nullable: Boolean = false
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "nearest_centroid_ids"
-  override def nullSafeEval(v: Any): Any =
-    CentroidKernels.nearestN(v.asInstanceOf[ArrayData], cents, n)
+  override def eval(input: InternalRow): Any =
+    CentroidKernels.nearestN(child.eval(input).asInstanceOf[ArrayData], cents, n)
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 

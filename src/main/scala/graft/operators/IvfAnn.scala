@@ -1,7 +1,8 @@
 package graft.operators
 
+import graft.functions.CentroidKernels.Cents
 import graft.functions.VectorMeanFast
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /**
@@ -16,20 +17,20 @@ import org.apache.spark.sql.functions._
  */
 object IvfAnn {
 
-  /** The collected centroid matrix for the map-side assignment kernel —
-    * nlist rows by contract (tiny at any corpus scale). */
-  private def centroidMatrix(centroids: DataFrame): graft.functions.CentroidKernels.Cents = {
+  /** The collected centroid matrix for the map-side kernels — nlist
+    * rows by contract (tiny at any corpus scale). */
+  private[graft] def centroidMatrix(centroids: DataFrame): Cents = {
     val rows = centroids
       .select(col("cell_id").cast("long"), col("cell_vec").cast("array<double>"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toArray)
       .sortBy(_._1)
-    new graft.functions.CentroidKernels.Cents(rows.map(_._1), rows.map(_._2))
+    new Cents(rows.map(_._1), rows.map(_._2))
   }
 
   /** Assign each corpus vector to its nearest of the given cell
     * centroids. Map-only (optimization round 20): the compiled
     * [[graft.functions.CentroidKernels]] argmax replays the former
-    * crossJoin → argmax-aggregation → join-back plan's cell ids
+    * all-pairs join → argmax-aggregation → join-back plan's cell ids
     * bit-identically (same cosine kernel, same ordering, lowest-id
     * ties) with ZERO exchanges instead of three-plus. `cell` is
     * appended as the last column.
@@ -44,7 +45,7 @@ object IvfAnn {
     val cents = centroidMatrix(centroids)
     if (cents.ids.isEmpty)
       // the old aggregation form assigned nothing when no centroids
-      // existed (empty crossJoin) — preserve the empty result
+      // existed (no pairs to join) — preserve the empty result
       corpus.filter(lit(false)).withColumn("cell", lit(0L))
     else corpus.withColumn("cell",
       graft.functions.centroid.nearestCell(col(vecCol), cents))
@@ -57,8 +58,8 @@ object IvfAnn {
     // Deterministic init: cell = xxhash64(id) mod nlist; then Lloyd steps
     // expressed as (assign → vector-mean) DataFrame passes. The corpus
     // projection is cached across iterations (each Lloyd step scans it);
-    // per-step cell tables are tiny (nlist rows) and get broadcast by the
-    // assignment's crossJoin.
+    // per-step cell tables are tiny (nlist rows) and are collected for the
+    // assignment kernel.
     val base = corpus.select(col(idCol).as("item_id"), col(vecCol).cast("array<double>").as("v"))
       .cache()
     var cells = base
@@ -68,7 +69,7 @@ object IvfAnn {
     // Lloyd step: map-side kernel assignment (zero exchanges — see
     // [[assignCells]]) straight into the vector-mean aggregation, whose
     // partial fold bounds the one remaining shuffle at nlist rows per
-    // partition. The former shape (crossJoin → argmax exchange → join
+    // partition. The former shape (all-pairs join → argmax exchange → join
     // back to base → means) paid three corpus-sized exchanges per pass
     // for the same cell ids; the kernel picks them bit-identically.
     // (Centroid COORDINATES still carry the usual last-ulp jitter of
@@ -79,7 +80,7 @@ object IvfAnn {
     (1 to iters).foreach { _ =>
       val cents = centroidMatrix(cells)
       // empty corpus → empty init aggregation: keep the empty cell
-      // table (the old crossJoin form converged to the same)
+      // table (the old all-pairs form converged to the same)
       if (cents.ids.nonEmpty)
         cells = base
           .withColumn("cell_id", graft.functions.centroid.nearestCell(col("v"), cents))
@@ -97,8 +98,10 @@ object IvfAnn {
   }
 
   /**
-   * ANN top-k: probe the nprobe nearest cells per query, brute-force only
-   * inside those cells. Output shape matches knnJoinCosine. With
+   * ANN top-k: each query row probes its own nprobe nearest cells (the
+   * kernel pick [[probedCellIds]] states, map-side, under centroids
+   * collected when the frame is built), brute-force only inside those
+   * cells. Output shape matches knnJoinCosine. With
    * nprobe = nlist this is EXACT — the same result as brute force,
    * computed as a shuffled cell-equi-join instead of a broadcast
    * (queries replicate nprobe ways; the corpus shuffles once by cell).
@@ -110,10 +113,8 @@ object IvfAnn {
   def annSearch(queries: DataFrame, corpusWithCells: DataFrame, cells: DataFrame,
                 idCol: String, vecCol: String, k: Int, nprobe: Int,
                 excludeSelf: Boolean = true): DataFrame =
-    probeTopK(queries, cells, idCol, vecCol, k, nprobe, excludeSelf,
-      corpusWithCells.select(col("cell"), col(idCol).as("neighbor_id"),
-        col(vecCol).cast("array<double>").as("cv")),
-      corpusWithCells.schema(idCol).dataType)
+    probeTopK(queries, centroidMatrix(cells), idCol, vecCol, k, nprobe, excludeSelf,
+      corpusWithCells, col(vecCol))
 
   /**
    * IVF-SQ8 storage: the cell-assigned corpus re-expressed as int8 codes
@@ -144,10 +145,8 @@ object IvfAnn {
   def annSearchQuantized(queries: DataFrame, quantizedCorpus: DataFrame, cells: DataFrame,
                          idCol: String, vecCol: String, k: Int, nprobe: Int,
                          excludeSelf: Boolean = true): DataFrame =
-    probeTopK(queries, cells, idCol, vecCol, k, nprobe, excludeSelf,
-      quantizedCorpus.select(col("cell"), col(idCol).as("neighbor_id"),
-        graft.functions.quant.dequantize(col("codes"), col("scale")).as("cv")),
-      quantizedCorpus.schema(idCol).dataType)
+    probeTopK(queries, centroidMatrix(cells), idCol, vecCol, k, nprobe, excludeSelf,
+      quantizedCorpus, graft.functions.quant.dequantize(col("codes"), col("scale")))
 
   /**
    * Persist a [[quantizeCells]] store as a value-addressable
@@ -215,7 +214,7 @@ object IvfAnn {
           .select(col(idCol), col("__cell_s").as("__prev"))
         // Semi-join against the INPUT ids, not `assigned` — the batch's
         // id set is the same either way, and probing with the raw input
-        // keeps the assignment pipeline (crossJoin + argmax + quantize)
+        // keeps the assignment pipeline (kernel assignment + quantize)
         // out of the broadcast subtree, so it evaluates once.
         assigned.join(broadcast(old
             .join(newVectors.select(col(idCol)), Seq(idCol), "left_semi")),
@@ -331,22 +330,37 @@ object IvfAnn {
     *
     * The nlist centroids come to the driver once (the one job: their
     * scan); each query row then picks its own top-nprobe cells map-side
-    * ([[graft.functions.CentroidKernels.nearestN]]) in the probe's
-    * window order — descending cosine under Spark's double ordering
-    * (NaN first), ties to the lower `cell_id` — so a local query frame
-    * adds no job and no shuffle. A NULL query vector ties every cell
-    * at a null similarity, which that order breaks to the nprobe
-    * lowest ids. Rows are independent: two rows sharing an `idCol`
-    * value each contribute their own nprobe cells (a superset of what
-    * the probe's per-id window keeps). */
+    * ([[graft.functions.CentroidKernels.nearestN]], the pick every probe
+    * makes) — descending cosine under Spark's double ordering (NaN
+    * first), ties to the lower `cell_id` — so a local query frame adds
+    * no job and no shuffle. A NULL query vector ties every cell at a
+    * null similarity, which that order breaks to the nprobe lowest ids.
+    * Rows are independent: each contributes its own nprobe cells. */
   def probedCellIds(queries: DataFrame, cells: DataFrame, idCol: String,
-                    vecCol: String, nprobe: Int): Seq[Long] = {
-    val cents = centroidMatrix(cells)
+                    vecCol: String, nprobe: Int): Seq[Long] =
+    probedCells(queries, centroidMatrix(cells), vecCol, nprobe)
+
+  private def probedCells(queries: DataFrame, cents: Cents, vecCol: String,
+                          nprobe: Int): Seq[Long] =
     if (cents.ids.isEmpty || nprobe <= 0) Nil
     else queries.select(graft.functions.centroid.nearestCells(col(vecCol), cents, nprobe))
-      .collect().iterator
-      .flatMap(r => if (r.isNullAt(0)) cents.ids.take(nprobe).toSeq else r.getSeq[Long](0))
-      .distinct.toSeq
+      .collect().iterator.flatMap(_.getSeq[Long](0)).distinct.toSeq
+
+  /** The persisted searches' one stored-cell read: the rows of the cells
+    * `queries` probe in the cell-laid-out table at `dir` — only their
+    * buckets' files, or snapshot `tag`'s whole generation — minus
+    * hash-cohabitant cells. Callers first refuse a `dir` that is no such
+    * table: it would read as zero rows. */
+  private[graft] def readProbedCells(dir: String, like: DataFrame, queries: DataFrame,
+                                     cents: Cents, vecCol: String, nprobe: Int,
+                                     tag: Option[String] = None): DataFrame = {
+    val spark = queries.sparkSession
+    val probed = probedCells(queries, cents, vecCol, nprobe)
+    (tag match {
+      case Some(t) => graft.sources.TableSink.readSnapshot(spark, dir, t)
+      case None => graft.sources.TableSink.readBuckets(spark, dir, like,
+        graft.sources.TableSink.bucketIdsFor(spark, dir, probed.map(_.toString)))
+    }).filter(col("cell").isin(probed: _*))
   }
 
   /**
@@ -373,32 +387,26 @@ object IvfAnn {
     require(graft.sources.TableSink.layoutColOf(dir).isDefined,
       s"table at '$dir' has no layout column — it was not written by " +
         "IvfAnn.writeIndex, so cell probes cannot address its buckets")
-    val probed = probedCellIds(queries, cells, idCol, vecCol, nprobe)
+    val cents = centroidMatrix(cells)
     val like = spark.range(0).select(lit(0L).as("cell"), lit(0L).as(idCol),
       lit(0.0).as("scale"), array().cast("array<tinyint>").as("codes"))
-    val corpus = graft.sources.TableSink.readBuckets(spark, dir, like,
-        graft.sources.TableSink.bucketIdsFor(spark, dir, probed.map(_.toString)))
-      .filter(col("cell").isin(probed: _*))
-    annSearchQuantized(queries, corpus, cells, idCol, vecCol, k, nprobe, excludeSelf)
+    probeTopK(queries, cents, idCol, vecCol, k, nprobe, excludeSelf,
+      readProbedCells(dir, like, queries, cents, vecCol, nprobe),
+      graft.functions.quant.dequantize(col("codes"), col("scale")))
   }
 
-  /** Shared probe: query → nprobe nearest cells (tiny broadcast cross
-    * join) → equi-join the prepared corpus side on cell → bounded-heap
+  /** Shared probe under collected centroids: each query row → its nprobe
+    * nearest cells (the centroid kernel, exploded map-side) → equi-join
+    * the corpus on cell, its vectors read as `corpusVec` → bounded-heap
     * top-k (map-side partial), keyed by the corpus id type. */
-  private def probeTopK(queries: DataFrame, cells: DataFrame, idCol: String,
-                        vecCol: String, k: Int, nprobe: Int, excludeSelf: Boolean,
-                        corpusSide: DataFrame,
-                        idType: org.apache.spark.sql.types.DataType): DataFrame = {
+  private[graft] def probeTopK(queries: DataFrame, cents: Cents, idCol: String,
+                               vecCol: String, k: Int, nprobe: Int, excludeSelf: Boolean,
+                               corpus: DataFrame, corpusVec: Column): DataFrame = {
+    val corpusSide = corpus.select(col("cell"), col(idCol).as("neighbor_id"),
+      corpusVec.cast("array<double>").as("cv"))
     val qCells = queries.select(col(idCol).as("query_id"), col(vecCol).cast("array<double>").as("qv"))
-      .crossJoin(broadcast(cells))
-      .select(col("query_id"), col("qv"), col("cell_id"),
-        graft.functions.vector.cosineSim(col("qv"), col("cell_vec")).as("csim"))
-      .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy("query_id")
-          .orderBy(desc("csim"), col("cell_id"))))
-      .filter(col("rn") <= nprobe)
-      .select(col("query_id"), col("qv"), col("cell_id").as("cell"))
-    val topk = idType match {
+      .withColumn("cell", explode(graft.functions.centroid.nearestCells(col("qv"), cents, nprobe)))
+    val topk = corpusSide.schema("neighbor_id").dataType match {
       case org.apache.spark.sql.types.StringType => graft.functions.TopKStr(k)
       case _ => graft.functions.TopK(k)
     }

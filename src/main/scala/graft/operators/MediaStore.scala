@@ -210,7 +210,7 @@ object MediaStore {
       val committed = graft.sources.StoreFs.get.exists(s"$vd/_SUCCESS")
       if (!committed)
         judge(spark, dir, keys).write.mode("overwrite").parquet(vd)
-      val out = spark.read.parquet(vd)
+      val out = graft.sources.StoreRead.parquet(spark, Seq(vd))
       absorbNovel(spark, dir, keys, out, version = batchId)
       out
     }

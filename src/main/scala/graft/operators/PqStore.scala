@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.CentroidKernels.Cents
 import graft.operators.PqOps.Codebook
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -124,7 +125,7 @@ object PqStore {
 
   def readCodebook(spark: SparkSession, dir: String): Codebook = {
     val path = fitDir(spark, dir).map(f => s"$f/codebook").getOrElse(s"$dir/_codebook")
-    val rows = spark.read.parquet(path)
+    val rows = graft.sources.StoreRead.parquet(spark, Seq(path))
       .collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Double](2).toArray).toMap
     val m = rows.keys.map(_._1).max + 1
     val ksub = rows.keys.map(_._2).max + 1
@@ -139,7 +140,7 @@ object PqStore {
     val f = fitDir(spark, dir).getOrElse(throw new IllegalStateException(
       s"PQ store at '$dir' has never been rebuilt — its cells live with " +
         "the caller that fitted them before write()"))
-    spark.read.parquet(s"$f/cells")
+    graft.sources.StoreRead.parquet(spark, Seq(s"$f/cells"))
   }
 
   /** Stale-fit guard for the caller-held (cells, cb) paths: once a
@@ -150,11 +151,11 @@ object PqStore {
     * with the stored fit pointer). The check is driver-side and tiny
     * (nlist + m·ksub rows) and only runs on rebuilt stores. */
   private def requireCurrentFit(spark: SparkSession, dir: String,
-                                cells: DataFrame, cb: Codebook): Unit =
-    fitDir(spark, dir).foreach { f =>
-      def m(df: DataFrame) = df.select(col("cell_id"), col("cell_vec"))
-        .collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
-      require(m(cells) == m(spark.read.parquet(s"$f/cells")),
+                                cents: => Cents, cb: Codebook): Unit =
+    fitDir(spark, dir).foreach { _ =>
+      val (held, fit) = (cents, IvfAnn.centroidMatrix(readCells(spark, dir)))
+      require(held.ids.sameElements(fit.ids) &&
+          held.vecs.corresponds(fit.vecs)(java.util.Arrays.equals(_, _)),
         s"the caller's cells are not the fit the PQ store at '$dir' was " +
           "rebuilt under — re-read them via PqStore.readCells")
       val scb = readCodebook(spark, dir)
@@ -178,7 +179,7 @@ object PqStore {
       graft.sources.WriterLease.withLease(dir, "pqstore-append") {
     require(graft.sources.TableSink.layoutColOf(dir).isDefined,
       s"no PQ index at '$dir' — write one with PqStore.write first")
-    requireCurrentFit(spark, dir, cells, cb)
+    requireCurrentFit(spark, dir, IvfAnn.centroidMatrix(cells), cb)
     if (!graft.sources.IdLayoutSidecar.exists(dir))
       graft.sources.IdLayoutSidecar.backfill(spark, dir, idCol)
     val clash = graft.sources.IdLayoutSidecar.resolve(spark, dir,
@@ -322,8 +323,8 @@ object PqStore {
     require(graft.sources.TableSink.layoutColOf(dir).isDefined,
       s"table at '$dir' has no layout column — it was not written by " +
         "PqStore.write, so cell probes cannot address its buckets")
-    requireCurrentFit(spark, dir, cells, cb)
-    val probed = IvfAnn.probedCellIds(queries, cells, idCol, vecCol, nprobe)
+    val cents = IvfAnn.centroidMatrix(cells)
+    requireCurrentFit(spark, dir, cents, cb)
     // Derive the stored id type from the table's own schema: a store
     // written with string ids must present string ids in the empty-read
     // fallback too — assuming long here mis-typed the probe for any
@@ -332,14 +333,11 @@ object PqStore {
     val like = spark.range(0).select(lit(0L).as("cell"),
       lit(null).cast(idType).as(idCol),
       array().cast("array<tinyint>").as("codes"))
-    val corpus = graft.sources.TableSink.readBuckets(spark, dir, like,
-        graft.sources.TableSink.bucketIdsFor(spark, dir, probed.map(_.toString)))
-      .filter(col("cell").isin(probed: _*))
-    val recon = corpus
-      .join(broadcast(cells), col("cell") === col("cell_id"))
-      .select(col("cell"), col(idCol),
-        PqOps.reconstructAdd(col("codes"), col("cell_vec"), cb).as(vecCol))
-    IvfAnn.annSearch(queries, recon, cells, idCol, vecCol, k, nprobe, excludeSelf)
+    // the read keeps only probed cells, each a key of this map
+    val cellVec = typedLit(cents.ids.zip(cents.vecs.map(_.toSeq)).toMap)
+    IvfAnn.probeTopK(queries, cents, idCol, vecCol, k, nprobe, excludeSelf,
+      IvfAnn.readProbedCells(dir, like, queries, cents, vecCol, nprobe),
+      PqOps.reconstructAdd(col("codes"), cellVec(col("cell")), cb))
   }
 
   /** Storage audit ([[graft.sources.StoreCheck]]): the coded table's

@@ -382,24 +382,16 @@ object Hybrid {
     require(TableSink.tableExists(annDir(storeDir)) &&
         TableSink.layoutColOf(annDir(storeDir)).isDefined,
       s"no cell-laid-out ANN table at '${annDir(storeDir)}' — run Hybrid.init first")
-    val cells = readCells(spark, storeDir, tag)
-    // Normalize to the store's canonical (id, vec) names — annSearch
+    val cents = IvfAnn.centroidMatrix(readCells(spark, storeDir, tag))
+    // Normalize to the store's canonical (id, vec) names — the probe
     // addresses both sides by one (idCol, vecCol) pair.
     val q = queries.select(col(qidCol).as("id"),
       col(qvecCol).cast("array<double>").as("vec"))
-    val probed = IvfAnn.probedCellIds(q, cells, "id", "vec", nprobe)
-    val corpus = (tag match {
-      case Some(t) => TableSink.readSnapshot(spark, annDir(storeDir), t)
-        .select(col("cell"), col("id"), col("vec"))
-      case None =>
-        val like = spark.range(0).select(lit(0L).as("cell"),
-          lit(0L).cast(storedIdType(spark, storeDir)).as("id"),
-          array().cast("array<double>").as("vec"))
-        TableSink.readBuckets(spark, annDir(storeDir), like,
-          TableSink.bucketIdsFor(spark, annDir(storeDir), probed.map(_.toString)))
-    }).filter(col("cell").isin(probed: _*))
-    IvfAnn.annSearch(q, corpus, cells, "id", "vec", k, nprobe,
-      excludeSelf = false)
+    val like = spark.range(0).select(lit(0L).as("cell"),
+      lit(0L).cast(storedIdType(spark, storeDir)).as("id"),
+      array().cast("array<double>").as("vec"))
+    IvfAnn.probeTopK(q, cents, "id", "vec", k, nprobe, excludeSelf = false,
+      IvfAnn.readProbedCells(annDir(storeDir), like, q, cents, "vec", nprobe, tag), col("vec"))
   }
 
   /**

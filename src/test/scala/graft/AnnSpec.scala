@@ -38,22 +38,23 @@ class AnnSpec extends AnyFunSuite with SparkSpec {
     val vecs = Seq.tabulate(400)(i => (i.toLong, Seq.fill(32)(rnd.nextGaussian())))
       .toDF("vec_id", "embedding")
     val q = vecs.filter(col("vec_id") < 10)
+    def hinted(df: org.apache.spark.sql.DataFrame) = df.queryExecution.analyzed.collect {
+      case h: org.apache.spark.sql.catalyst.plans.logical.ResolvedHint =>
+        h.child.output.map(_.name)
+    }
     // Reference run on the normal broadcast path (default 10MB threshold).
-    val exact = pairs(SimilarityOps.knnJoinCosine(q, vecs, "vec_id", "embedding", 5))
+    val direct = SimilarityOps.knnJoinCosine(q, vecs, "vec_id", "embedding", 5)
+    assert(hinted(direct).nonEmpty, "the direct path broadcasts its small side")
+    val exact = pairs(direct)
     val old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1024")
     try {
       val routed = SimilarityOps.knnJoinCosine(q, vecs, "vec_id", "embedding", 5,
         broadcastQueries = false, annNlist = 8)
-      // The only broadcast hints left are the tiny nlist-row cell tables —
-      // never the corpus (neighbor_id/cv) or query (query_id/qv) relations.
-      val hinted = routed.queryExecution.analyzed.collect {
-        case h: org.apache.spark.sql.catalyst.plans.logical.ResolvedHint =>
-          h.child.output.map(_.name)
-      }
-      assert(hinted.nonEmpty, "cell tables are still broadcast on the re-route")
-      assert(hinted.forall(cols => !cols.contains("neighbor_id") && !cols.contains("qv")),
-        s"an over-threshold relation was broadcast: $hinted")
+      // No broadcast hint is left: the cells are picked map-side by the
+      // centroid kernel, and neither the corpus (neighbor_id/cv) nor the
+      // query (query_id/qv) relation is broadcast.
+      assert(hinted(routed).isEmpty, s"the re-route broadcast ${hinted(routed)}")
       assert(pairs(routed) == exact, "full-probe cell join must equal brute force")
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
   }

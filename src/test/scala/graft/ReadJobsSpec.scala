@@ -1,11 +1,13 @@
 package graft
 
-import graft.operators.{IvfAnn, SemDedupStore}
+import graft.operators.{IvfAnn, PqOps, PqStore, SemDedupStore}
 import graft.pipelines.{Admission, Hybrid}
 import graft.sources.{AdditiveStore, BucketedParts, StoreRead, TableSink}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.TestBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.execution.SparkPlanInfo
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -15,21 +17,35 @@ import org.scalatest.funsuite.AnyFunSuite
  * Serving reads run no Spark job before their real query: every store
  * read hands Spark a footer-derived schema ([[StoreRead]]) equal to the
  * one inference would have produced, the BM25 term list collects
- * without a shuffle, and [[IvfAnn.probedCellIds]] picks cells map-side
- * in the window form's exact order.
+ * without a shuffle, and every IVF probe picks its cells map-side with
+ * the centroid kernel, in the former window form's exact order.
  */
 class ReadJobsSpec extends AnyFunSuite with SparkSpec {
 
-  private final class JobCounter extends SparkListener {
+  private class JobCounter extends SparkListener {
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
   }
 
-  /** `body`'s result and the number of Spark jobs it started. */
-  private def jobsOf[T](body: => T): (T, Int) = {
+  /** Counts only the jobs of SQL executions whose plan scans `dir`. */
+  private final class ScanJobCounter(dir: String) extends JobCounter {
+    private val execs = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
+    private def scans(p: SparkPlanInfo): Boolean =
+      p.metadata.get("Location").exists(l => l.contains(s"$dir]") || l.contains(s"$dir,")) ||
+        p.children.exists(scans)
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case s: SparkListenerSQLExecutionStart if scans(s.sparkPlanInfo) => execs.add(s.executionId); ()
+      case _ => ()
+    }
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      Option(e.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+        .filter(id => execs.contains(id.toLong)).foreach(_ => super.onJobStart(e))
+  }
+
+  /** `body`'s result and the number of Spark jobs `c` counted while it ran. */
+  private def counted[T](c: JobCounter)(body: => T): (T, Int) = {
     val sc = spark.sparkContext
     TestBus.drain(sc)
-    val c = new JobCounter
     sc.addSparkListener(c)
     try {
       val out = body
@@ -37,6 +53,9 @@ class ReadJobsSpec extends AnyFunSuite with SparkSpec {
       (out, c.jobs.get)
     } finally sc.removeSparkListener(c)
   }
+
+  /** `body`'s result and the number of Spark jobs it started. */
+  private def jobsOf[T](body: => T): (T, Int) = counted(new JobCounter)(body)
 
   private def tmp(name: String): String =
     java.nio.file.Files.createTempDirectory(name).toString
@@ -171,7 +190,7 @@ class ReadJobsSpec extends AnyFunSuite with SparkSpec {
   private def rows(df: DataFrame) = df.collect()
     .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
 
-  test("a one-row local-query Hybrid.search runs at most 13 jobs, with the same rows") {
+  test("a one-row local-query Hybrid.search runs at most 11 jobs, with the same rows") {
     val one = queries.orderBy("qid").limit(1)
     val q = localQuery(one)
     def search(df: DataFrame) = Hybrid.search(spark, hybridDir, df, "qid", "qtext", "qvec",
@@ -179,39 +198,126 @@ class ReadJobsSpec extends AnyFunSuite with SparkSpec {
     val expected = rows(search(one))
     for (_ <- 1 to 2) {
       val (got, jobs) = jobsOf(rows(search(q)))
-      assert(jobs <= 13, s"one-row search ran $jobs jobs")
+      assert(jobs <= 11, s"one-row search ran $jobs jobs")
       assert(got == expected && got.size == 5)
     }
   }
 
-  /** The probe's former window form: the reference order. */
-  private def windowProbe(queries: DataFrame, cells: DataFrame, nprobe: Int): Set[Long] =
+  /** The probe's former window form, the reference order: each query
+    * id's nprobe best cells by a `row_number()` window over a broadcast
+    * crossJoin — (query_id, qv, cell). */
+  private def windowCells(queries: DataFrame, cells: DataFrame, nprobe: Int): DataFrame =
     queries.select(col("id").as("query_id"), col("vec").cast("array<double>").as("qv"))
       .crossJoin(broadcast(cells))
-      .select(col("query_id"), col("cell_id"),
+      .select(col("query_id"), col("qv"), col("cell_id"),
         graft.functions.vector.cosineSim(col("qv"), col("cell_vec")).as("csim"))
       .withColumn("rn", row_number().over(
         org.apache.spark.sql.expressions.Window.partitionBy("query_id")
           .orderBy(desc("csim"), col("cell_id"))))
       .filter(col("rn") <= nprobe)
-      .select("cell_id").distinct()
+      .select(col("query_id"), col("qv"), col("cell_id").as("cell"))
+
+  private def windowProbe(queries: DataFrame, cells: DataFrame, nprobe: Int): Set[Long] =
+    windowCells(queries, cells, nprobe).select("cell").distinct()
       .collect().map(_.getLong(0)).toSet
 
-  test("probedCellIds equals the window form on tied cosines and NaN/null query vectors") {
-    val cellSchema = StructType(Seq(StructField("cell_id", LongType), StructField("cell_vec", ArrayType(DoubleType))))
-    val cells = spark.createDataFrame(java.util.Arrays.asList(
+  /** The former top-k composition over [[windowCells]]; `corpusSide` is
+    * (cell, neighbor_id, cv). */
+  private def windowSearch(queries: DataFrame, cells: DataFrame, corpusSide: DataFrame,
+                           k: Int, nprobe: Int): DataFrame =
+    windowCells(queries, cells, nprobe).join(corpusSide, "cell")
+      .filter(col("query_id") =!= col("neighbor_id"))
+      .select(col("query_id"), col("neighbor_id"),
+        graft.functions.vector.cosineSim(col("qv"), col("cv")).as("sim"))
+      .groupBy("query_id")
+      .agg(graft.functions.TopK(k)(col("sim"), col("neighbor_id")).as("nn"))
+      .select(col("query_id"), posexplode(col("nn")).as(Seq("rk", "n")))
+      .select(col("query_id"), col("n.id").as("neighbor_id"),
+        col("n.score").as("sim"), (col("rk") + 1).as("rank"))
+
+  /** Search rows with the similarity as text, so NaN equals NaN. */
+  private def searchRows(df: DataFrame): Set[(Long, Long, String, Int)] = df.collect()
+    .map(r => (r.getLong(0), r.getLong(1), String.valueOf(r.get(2)), r.getInt(3))).toSet
+
+  private val vecSchema = StructType(Seq(StructField("id", LongType), StructField("vec", ArrayType(DoubleType))))
+  private def vecs(rows: Seq[Row]): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), vecSchema)
+
+  /** Seven 2-d centroids with tied directions (0 and 5, 2 and 3) and a
+    * zero vector (6). */
+  private lazy val tiedCells = spark.createDataFrame(java.util.Arrays.asList(
       Row(5L, Seq(2.0, 0.0)), Row(0L, Seq(1.0, 0.0)), Row(2L, Seq(0.0, 1.0)), Row(3L, Seq(0.0, 3.0)),
-      Row(4L, Seq(1.0, 1.0)), Row(1L, Seq(-1.0, 0.0)), Row(6L, Seq(0.0, 0.0))), cellSchema)
-    val qSchema = StructType(Seq(StructField("id", LongType), StructField("vec", ArrayType(DoubleType))))
-    val qs = Seq(
-      Row(0L, Seq(1.0, 0.0)), Row(1L, Seq(0.0, 0.0)), Row(2L, Seq(Double.NaN, 1.0)),
-      Row(3L, null), Row(4L, Seq(1.0, -1.0)), Row(5L, Seq(0.5, 0.5)), Row(6L, Seq(-0.0, 2.0)))
-    for (subset <- qs.map(Seq(_)) :+ qs; nprobe <- 0 to 8) {
-      val q = spark.createDataFrame(java.util.Arrays.asList(subset: _*), qSchema)
-      val (got, jobs) = jobsOf(IvfAnn.probedCellIds(q, cells, "id", "vec", nprobe))
-      assert(got.toSet == windowProbe(q, cells, nprobe), s"queries $subset, nprobe $nprobe")
+      Row(4L, Seq(1.0, 1.0)), Row(1L, Seq(-1.0, 0.0)), Row(6L, Seq(0.0, 0.0))),
+    StructType(Seq(StructField("cell_id", LongType), StructField("cell_vec", ArrayType(DoubleType)))))
+
+  /** Queries: a tie, a zero vector, NaN, null, -0.0. */
+  private val edgeQueries = Seq(
+    Row(0L, Seq(1.0, 0.0)), Row(1L, Seq(0.0, 0.0)), Row(2L, Seq(Double.NaN, 1.0)),
+    Row(3L, null), Row(4L, Seq(1.0, -1.0)), Row(5L, Seq(0.5, 0.5)), Row(6L, Seq(-0.0, 2.0)))
+
+  test("probedCellIds equals the window form on tied cosines and NaN/null query vectors") {
+    for (subset <- edgeQueries.map(Seq(_)) :+ edgeQueries; nprobe <- 0 to 8) {
+      val q = vecs(subset)
+      val (got, jobs) = jobsOf(IvfAnn.probedCellIds(q, tiedCells, "id", "vec", nprobe))
+      assert(got.toSet == windowProbe(q, tiedCells, nprobe), s"queries $subset, nprobe $nprobe")
       assert(got.distinct == got)
       assert(jobs == 0, s"local queries and centroids ran $jobs job(s)")
+    }
+  }
+
+  test("annSearch and annSearchQuantized return the window form's rows, nprobe 0 through nlist+1") {
+    // A corpus on a small grid, so cosines tie often; -0.0 coordinates
+    // and a NaN vector included. Ids overlap the query ids (excludeSelf).
+    val grid = Seq(-1.0, -0.0, 0.0, 0.5, 2.0)
+    val corpus = IvfAnn.assignCells(vecs(
+        (for (x <- grid; y <- grid) yield Seq(x, y)).zipWithIndex
+          .map { case (v, i) => Row(i.toLong, v) } :+ Row(99L, Seq(Double.NaN, 0.0))),
+      "id", "vec", tiedCells)
+    val sq8 = IvfAnn.quantizeCells(corpus, "id", "vec")
+    val q = vecs(edgeQueries)
+    for (nprobe <- 0 to 8) {
+      assert(searchRows(IvfAnn.annSearch(q, corpus, tiedCells, "id", "vec", 4, nprobe)) ==
+        searchRows(windowSearch(q, tiedCells,
+          corpus.select(col("cell"), col("id").as("neighbor_id"), col("vec").as("cv")), 4, nprobe)),
+        s"annSearch, nprobe $nprobe")
+      assert(searchRows(IvfAnn.annSearchQuantized(q, sq8, tiedCells, "id", "vec", 4, nprobe)) ==
+        searchRows(windowSearch(q, tiedCells, sq8.select(col("cell"), col("id").as("neighbor_id"),
+          graft.functions.quant.dequantize(col("codes"), col("scale")).as("cv")), 4, nprobe)),
+        s"annSearchQuantized, nprobe $nprobe")
+    }
+  }
+
+  test("each stored search collects the centroids in exactly one job") {
+    val vecsIn = emb.select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
+      .localCheckpoint(true)
+    val fit = IvfAnn.buildCells(vecsIn, "vec_id", "embedding", nlist = 8)
+    val cellsDir = tmp("readjobs_cells") + "/cells"
+    fit.write.parquet(cellsDir)
+    val cells = spark.read.parquet(cellsDir)
+    val assigned = IvfAnn.assignCells(vecsIn, "vec_id", "embedding", fit)
+    val sq8Dir = tmp("readjobs_sq8")
+    IvfAnn.writeIndex(spark, sq8Dir, IvfAnn.quantizeCells(assigned, "vec_id", "embedding"),
+      "vec_id", numBuckets = 8)
+    val cb = PqOps.trainCodebooks(assigned.join(broadcast(fit), col("cell") === col("cell_id"))
+        .select(col("vec_id"), zip_with(col("embedding"), col("cell_vec"), (x, y) => x - y).as("resid")),
+      "vec_id", "resid", m = 8, ksub = 16, dim = 64)
+    val pqDir = tmp("readjobs_pq") + "/ix"
+    PqStore.write(spark, pqDir, PqStore.encodeResiduals(assigned, fit, "vec_id", "embedding", cb, 64),
+      "vec_id", numBuckets = 8)
+    val q = localQuery(vecsIn.filter(col("vec_id") < 3))
+    val hq = localQuery(queries.orderBy("qid").limit(2))
+    val hybridCells = new Path(Hybrid.readCells(spark, hybridDir).inputFiles.head).getParent.toString
+    val searches: Seq[(String, String, () => DataFrame)] = Seq(
+      ("IvfAnn.annSearchQuantizedStored", cellsDir, () => IvfAnn.annSearchQuantizedStored(
+        sq8Dir, q, cells, "vec_id", "embedding", k = 5, nprobe = 2)),
+      ("PqStore.search", cellsDir, () => PqStore.search(
+        pqDir, q, cells, cb, "vec_id", "embedding", k = 5, nprobe = 2)),
+      ("Hybrid.search", hybridCells, () => Hybrid.search(spark, hybridDir, hq, "qid", "qtext", "qvec",
+        k = 5, kPerRun = 10, nprobe = 2, maxDfFrac = 1.0)))
+    for ((name, dir, search) <- searches) {
+      val (n, jobs) = counted(new ScanJobCounter(dir.stripPrefix("file:")))(search().collect().length)
+      assert(n > 0, s"$name found nothing")
+      assert(jobs == 1, s"$name read its centroids in $jobs job(s)")
     }
   }
 }
