@@ -9,36 +9,60 @@ import scala.collection.mutable.ArrayBuffer
 case class Scored(score: Double, id: Long)
 
 /**
- * Bounded top-k-by-score aggregate. The crucial scale property vs the
- * `Window.partitionBy(key).orderBy(desc(score)) rank<=k` formulation: this
- * aggregates PARTIALLY MAP-SIDE — each partition forwards at most k
- * candidates per group into the shuffle, so a kNN join over Q queries ×
- * C corpus rows shuffles O(Q·k·partitions) rows instead of O(Q·C).
- * (Reference operator: FAISS top-50 search, recommendation-trainer.py:89-100.)
+ * Bounded top-k aggregate under `ord` (best first). The crucial scale
+ * property vs the `Window.partitionBy(key).orderBy(desc(score)) rank<=k`
+ * formulation: this aggregates PARTIALLY MAP-SIDE — the buffer never
+ * holds more than k candidates, so each partition forwards at most k per
+ * group into the shuffle and a kNN join over Q queries × C corpus rows
+ * shuffles O(Q·k·partitions) rows instead of O(Q·C). (Reference
+ * operator: FAISS top-50 search, recommendation-trainer.py:89-100.)
  *
- * Ordering: score desc, id asc (deterministic tie-break).
+ * The buffer is a binary heap with the WORST kept candidate at the root:
+ * a candidate enters while there is room, or replaces the root when
+ * `ord` ranks it strictly better. `ord` is a total order (NaN scores
+ * rank last), so the kept set equals sort-then-take exactly.
  */
-class TopKAgg(k: Int) extends Aggregator[Scored, ArrayBuffer[Scored], Seq[Scored]] {
-  private val ord: Ordering[Scored] =
-    Ordering.by((s: Scored) => (-s.score, s.id))
+abstract class BoundedTopK[T](k: Int, ord: Ordering[T])
+    extends Aggregator[T, ArrayBuffer[T], Seq[T]] {
 
-  private def trim(b: ArrayBuffer[Scored]): ArrayBuffer[Scored] = {
-    if (b.length > k) {
-      val kept = b.sorted(ord).take(k)
-      b.clear(); b ++= kept
+  private def swap(b: ArrayBuffer[T], i: Int, j: Int): Unit = {
+    val t = b(i); b(i) = b(j); b(j) = t
+  }
+
+  /** Restore the worst-at-root heap property downward from slot `i`. */
+  private def siftDown(b: ArrayBuffer[T], i0: Int): Unit = {
+    var i = i0
+    var done = false
+    while (!done) {
+      val l = 2 * i + 1
+      var w = i
+      if (l < b.length && ord.gt(b(l), b(w))) w = l
+      if (l + 1 < b.length && ord.gt(b(l + 1), b(w))) w = l + 1
+      if (w == i) done = true else { swap(b, i, w); i = w }
     }
-    b
   }
 
-  override def zero: ArrayBuffer[Scored] = new ArrayBuffer[Scored](k + 8)
-  override def reduce(b: ArrayBuffer[Scored], a: Scored): ArrayBuffer[Scored] = {
-    if (a != null) { b += a; if (b.length >= 2 * k) trim(b) }
-    b
+  override def zero: ArrayBuffer[T] = new ArrayBuffer[T](k)
+  override def reduce(b: ArrayBuffer[T], a: T): ArrayBuffer[T] = {
+    if (a == null || k <= 0) b
+    else if (b.length < k) {
+      b += a
+      var i = b.length - 1
+      while (i > 0 && ord.gt(b(i), b((i - 1) / 2))) { swap(b, i, (i - 1) / 2); i = (i - 1) / 2 }
+      b
+    } else {
+      if (ord.lt(a, b(0))) { b(0) = a; siftDown(b, 0) }
+      b
+    }
   }
-  override def merge(x: ArrayBuffer[Scored], y: ArrayBuffer[Scored]): ArrayBuffer[Scored] = {
-    x ++= y; trim(x)
-  }
-  override def finish(b: ArrayBuffer[Scored]): Seq[Scored] = b.sorted(ord).take(k).toSeq
+  override def merge(x: ArrayBuffer[T], y: ArrayBuffer[T]): ArrayBuffer[T] =
+    y.foldLeft(x)(reduce)
+  override def finish(b: ArrayBuffer[T]): Seq[T] = b.sorted(ord).toSeq
+}
+
+/** Ordering: score desc, id asc (deterministic tie-break). */
+class TopKAgg(k: Int)
+    extends BoundedTopK[Scored](k, Ordering.by((s: Scored) => (-s.score, s.id))) {
   override def bufferEncoder: Encoder[ArrayBuffer[Scored]] =
     org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()
   override def outputEncoder: Encoder[Seq[Scored]] =
@@ -53,25 +77,12 @@ object TopK {
   }
 }
 
-/** String-keyed variant of [[Scored]]/[[TopKAgg]] (same bounded-heap
-  * map-side-partial property; tie-break id asc lexicographically). */
+/** String-keyed variant of [[Scored]]/[[TopKAgg]] (tie-break id asc
+  * lexicographically). */
 case class ScoredS(score: Double, id: String)
 
-class TopKAggS(k: Int) extends Aggregator[ScoredS, ArrayBuffer[ScoredS], Seq[ScoredS]] {
-  private val ord: Ordering[ScoredS] = Ordering.by((s: ScoredS) => (-s.score, s.id))
-  private def trim(b: ArrayBuffer[ScoredS]): ArrayBuffer[ScoredS] = {
-    if (b.length > k) { val kept = b.sorted(ord).take(k); b.clear(); b ++= kept }
-    b
-  }
-  override def zero: ArrayBuffer[ScoredS] = new ArrayBuffer[ScoredS](k + 8)
-  override def reduce(b: ArrayBuffer[ScoredS], a: ScoredS): ArrayBuffer[ScoredS] = {
-    if (a != null) { b += a; if (b.length >= 2 * k) trim(b) }
-    b
-  }
-  override def merge(x: ArrayBuffer[ScoredS], y: ArrayBuffer[ScoredS]): ArrayBuffer[ScoredS] = {
-    x ++= y; trim(x)
-  }
-  override def finish(b: ArrayBuffer[ScoredS]): Seq[ScoredS] = b.sorted(ord).take(k).toSeq
+class TopKAggS(k: Int)
+    extends BoundedTopK[ScoredS](k, Ordering.by((s: ScoredS) => (-s.score, s.id))) {
   override def bufferEncoder: Encoder[ArrayBuffer[ScoredS]] =
     org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()
   override def outputEncoder: Encoder[Seq[ScoredS]] =

@@ -533,7 +533,7 @@ object Admission {
     }
     val sem = graft.operators.SemDedupStore.exists(semDir(storeDir))
     // sem pre-check runs BEFORE any mutation too (refuses a stale pin)
-    if (sem) { graft.operators.SemDedupStore.snapshotPinned(semDir(storeDir), tag); () }
+    if (sem) { graft.operators.SemDedupStore.kernel.snapshotCheck(semDir(storeDir), tag); () }
     graft.sources.DeltaParts.snapshot(spanDir(storeDir), tag)
     if (existingFp.isEmpty) { TableSink.snapshot(fpD, tag); () }
     if (sem) graft.operators.SemDedupStore.snapshot(semDir(storeDir), tag)

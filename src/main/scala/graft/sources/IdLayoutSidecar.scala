@@ -23,8 +23,8 @@ import org.apache.spark.sql.functions._
  * sidecar buckets plus ≤ 2·|batch| candidate-cell buckets, never a
  * table scan. A sidecar miss is authoritative for ids (the intent
  * commits first), EXCEPT on a store whose history predates the sidecar:
- * those must [[backfill]] once before relying on it (callers fall back
- * to the full-projection scan until then).
+ * those must [[backfill]] once before relying on it ([[CellStore.add]]
+ * adopts a sidecar-less store that way).
  *
  * Deletions: [[TableSink.deleteByIds]] on the main table leaves the
  * sidecar row stale — harmless ([[resolve]] finds no copy in the
@@ -36,9 +36,8 @@ object IdLayoutSidecar {
 
   def dir(tableDir: String): String = tableDir + "_idmap"
 
-  /** Is the sidecar present? Callers use this as the pre-sidecar-store
-    * escape: absent → fall back to the full-projection scan (correct,
-    * unpruned) and suggest [[backfill]]. */
+  /** Is the sidecar present? Absent means pre-sidecar history or a
+    * rebuild/restore in flight: [[backfill]] before relying on it. */
   def exists(tableDir: String): Boolean = TableSink.tableExists(dir(tableDir))
 
   private def idTypeOf(spark: SparkSession, anyDir: String, idCol: String) =
@@ -126,10 +125,10 @@ object IdLayoutSidecar {
   /** Remove the sidecar entirely — the first move of a layout REBUILD
     * (re-fit centroids, re-home every row): a full rebuild moves rows
     * arbitrarily, so a sidecar surviving into the new layout would
-    * VIOLATE the cell/prev_cell invariant. Dropping it first flips
-    * callers onto the correct (unpruned) full-scan fallback through
-    * every crash window; [[backfill]] after the new generation commits
-    * restores the O(batch) path. */
+    * VIOLATE the cell/prev_cell invariant. Dropping it first leaves
+    * every crash window sidecar-less (the next add adopts the live
+    * layout with one [[backfill]]); re-seeding after the new generation
+    * commits restores the O(batch) path. */
   def drop(tableDir: String): Unit =
     DeltaParts.rmDir(dir(tableDir))
 

@@ -6,11 +6,11 @@ package graft.sources
  * meta line so it is ATOMIC with the data it describes — a sidecar
  * counter could desync across a crash; the manifest cannot. One format,
  * one parser, for every store that fixes centroids at fit time and
- * appends under them ([[graft.operators.IvfAnn]]'s SQ8 index,
+ * appends under them: the [[CellStore]] kernel (the lifecycle of
  * [[graft.pipelines.Hybrid]]'s float ANN leg,
- * [[graft.operators.SemDedupStore]]'s member table) — the
- * [[AdditiveLedger]] lesson: three inline copies of the same accounting
- * dance is how the next drift bug gets written once and fixed twice.
+ * [[graft.operators.SemDedupStore]]'s member table and
+ * [[graft.operators.PqStore]]'s codes) and [[graft.operators.IvfAnn]]'s
+ * SQ8 index.
  *
  * Format: `ivf:v1;base=N;added=M[;cells=DIR]`
  *  - `base`  = rows the centroids were FITTED against;
@@ -61,10 +61,12 @@ object IndexMeta {
       s"ivf:v1;base=$b;added=${a + delta}" + c.fold("")(x => s";cells=$x")
     }
 
-  /** The centroid-set pointer of the LIVE generation, if the store
-    * versions its centroids (store-relative dir). */
-  def cellsPtr(dir: String): Option[String] =
-    TableSink.metaOf(dir).flatMap(parse).flatMap(_._3)
+  /** The centroid-set pointer of the LIVE generation (or of the one
+    * `tag` pins), if the store versions its centroids (store-relative
+    * dir). */
+  def cellsPtr(dir: String, tag: Option[String] = None): Option[String] =
+    tag.fold(TableSink.metaOf(dir))(TableSink.pinnedMetaOf(dir, _))
+      .flatMap(parse).flatMap(_._3)
 
   /**
    * The centroid-rebuild staleness trigger: fixed centroids only ever

@@ -73,10 +73,11 @@ object TableSink {
 
   private def currentManifest(dir: String): Option[Manifest] = {
     val p = ptrPath(dir)
-    if (!fs.exists(p)) return None
-    val name = fs.readString(p).trim
-    val mf = s"${manifestDir(dir)}/$name"
-    val lines = fs.readLines(mf)
+    if (!fs.exists(p)) None else Some(manifestNamed(dir, fs.readString(p).trim))
+  }
+
+  private def manifestNamed(dir: String, name: String): Manifest = {
+    val lines = fs.readLines(s"${manifestDir(dir)}/$name")
     val buckets = lines.head.stripPrefix("buckets=").toInt
     val (layout, rest0) = lines.tail match {
       case l +: r if l.startsWith("bucketcol=") => (Some(l.stripPrefix("bucketcol=")), r)
@@ -90,7 +91,7 @@ object TableSink {
       val Array(b, rel) = l.split('\t')
       b.toInt -> rel
     }.toMap
-    Some(Manifest(name.stripPrefix("m-").toLong, buckets, layout, meta, paths))
+    Manifest(name.stripPrefix("m-").toLong, buckets, layout, meta, paths)
   }
 
   /** The bucket a key tuple hashes to (exposed for tests/partitioned readers). */
@@ -127,9 +128,16 @@ object TableSink {
    *    store moved on since a half-taken `context`.
    */
   def snapshotNoRepoint(dir: String, tag: String,
-                        context: String = "snapshot"): Unit = {
+                        context: String = "snapshot"): Unit =
+    if (!snapshotCheck(dir, tag, context)) { snapshot(dir, tag); () }
+
+  /** The non-mutating half of [[snapshotNoRepoint]], for composite
+    * stores that must check every piece before mutating any: true when
+    * `tag` already pins the live content, false when it is absent, and
+    * a loud refusal when the store moved on since the tag. */
+  def snapshotCheck(dir: String, tag: String, context: String = "snapshot"): Boolean =
     listSnapshots(dir).get(tag) match {
-      case None => snapshot(dir, tag); ()
+      case None => false
       case Some(pinned) =>
         val cur = currentManifest(dir).getOrElse(throw new IllegalStateException(
           s"tag '$tag' exists at '$dir' but no live table does"))
@@ -145,8 +153,8 @@ object TableSink {
           // republished the pinned state): the existing pin already
           // references the same bytes — nothing to do.
         }
+        true
     }
-  }
 
   /** The manifest-pinned layout column of the table at `dir`; None when
     * the table is absent OR key-hash-bucketed (check [[tableExists]] to
@@ -564,13 +572,7 @@ object TableSink {
     * on an unknown tag; a pinned generation's files cannot have been
     * GC'd while its tag lives. */
   def readSnapshot(spark: SparkSession, dir: String, tag: String): DataFrame = {
-    val p = s"${snapshotDir(dir)}/$tag"
-    require(fs.exists(p), s"no snapshot '$tag' at '$dir' " +
-      s"(have: ${listSnapshots(dir).keys.toSeq.sorted.mkString(", ")})")
-    val name = fs.readString(p).trim
-    val mf = s"${manifestDir(dir)}/$name"
-    val paths = fs.readLines(mf).filter(_.contains('\t'))
-      .map(l => s"$dir/${l.split('\t')(1)}").sorted
+    val paths = currentPaths(dir, Some(pinnedManifest(dir, tag)))
     if (paths.isEmpty) throw new IllegalStateException(
       s"snapshot '$tag' at '$dir' pinned an EMPTY table generation " +
         "(every bucket was emptied before the tag) — there is no schema " +
@@ -578,6 +580,20 @@ object TableSink {
         "an empty frame of the right shape")
     StoreRead.parquet(spark, paths, merge = true)
   }
+
+  /** The manifest `tag` pins; fails loud on an unknown tag. */
+  private def pinnedManifest(dir: String, tag: String): Manifest =
+    manifestNamed(dir, fs.readString(pinnedPath(dir, tag)).trim)
+
+  private def pinnedPath(dir: String, tag: String): String = {
+    val p = s"${snapshotDir(dir)}/$tag"
+    require(fs.exists(p), s"no snapshot '$tag' at '$dir' " +
+      s"(have: ${listSnapshots(dir).keys.toSeq.sorted.mkString(", ")})")
+    p
+  }
+
+  /** [[metaOf]] for the generation `tag` pins. */
+  def pinnedMetaOf(dir: String, tag: String): Option[String] = pinnedManifest(dir, tag).meta
 
   /** Unpin `tag`; the generation becomes reclaimable at the next commit's
     * GC (subject to the normal recency/grace bounds). */
@@ -593,10 +609,8 @@ object TableSink {
     * seq collide with a newer generation). The tag stays live. */
   def restore(dir: String, tag: String): Unit =
       WriterLease.withLease(dir, "tablesink-restore") {
-    val p = s"${snapshotDir(dir)}/$tag"
-    require(fs.exists(p), s"no snapshot '$tag' at '$dir' " +
-      s"(have: ${listSnapshots(dir).keys.toSeq.sorted.mkString(", ")})")
-    val content = fs.readString(s"${manifestDir(dir)}/${fs.readString(p).trim}")
+    val content = fs.readString(
+      s"${manifestDir(dir)}/${fs.readString(pinnedPath(dir, tag)).trim}")
     val maxSeq = fs.list(manifestDir(dir))
       .filter(_.name.startsWith("m-"))
       .map(_.name.stripPrefix("m-").toLong).max

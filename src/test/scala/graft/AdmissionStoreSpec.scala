@@ -543,7 +543,7 @@ class AdmissionStoreSpec extends AnyFunSuite with SparkSpec {
     // a later repeat of IT is then caught by the standing store.
     SemDedupStore.absorb(spark, semDir,
       embed(batch.filter(col("doc_id") === 811L)), "doc_id", "embedding",
-      version = 1L, assumeNewIds = true)
+      version = 1L)
     val v2 = SemDedupStore.probe(spark, semDir,
         embed(df(Seq(821L -> goodText('z')))), "doc_id", "embedding", eps = 0.99)
       .collect().map(r => r.getLong(0) -> r.getBoolean(3)).toMap

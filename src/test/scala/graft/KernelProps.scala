@@ -130,6 +130,28 @@ object KernelProps extends Properties("kernels") {
       got == ss.sortBy(s => (-s.score, s.id)).take(k)
     }
 
+  // Scores drawn from a few values (ties) plus NaN, ids with repeats.
+  private val tiedGen: Gen[List[graft.functions.Scored]] = for {
+    n <- Gen.choose(0, 200)
+    xs <- Gen.listOfN(n, Gen.zip(
+      Gen.oneOf(0.5, 0.25, -0.0, 0.0, -1.0, Double.NaN), Gen.choose(0L, 30L)))
+  } yield xs.map { case (s, i) => graft.functions.Scored(s, i) }
+
+  property("TopKAgg and TopKAggS buffers never exceed k; ties and NaN as sort-prefix") =
+    forAll(tiedGen, Gen.choose(1, 8)) { (xs, k) =>
+      val agg = new graft.functions.TopKAgg(k)
+      val buf = agg.zero
+      val sizes = xs.map(a => agg.reduce(buf, a).length)
+      val (l, r) = xs.splitAt(xs.length / 3)
+      val merged = agg.merge(l.foldLeft(agg.zero)(agg.reduce), r.foldLeft(agg.zero)(agg.reduce))
+      val ss = xs.map(s => graft.functions.ScoredS(s.score, f"id-${s.id}%03d"))
+      val aggS = new graft.functions.TopKAggS(k)
+      val bufS = ss.foldLeft(aggS.zero)(aggS.reduce)
+      sizes.forall(_ <= k) && merged.length <= k && bufS.length <= k &&
+        agg.finish(merged) == xs.sortBy(s => (-s.score, s.id)).take(k) &&
+        aggS.finish(bufS) == ss.sortBy(s => (-s.score, s.id)).take(k)
+    }
+
   import org.apache.spark.unsafe.types.UTF8String
   private def cdc(s: String, w: Int, m: Long): List[Int] =
     graft.functions.SigKernels

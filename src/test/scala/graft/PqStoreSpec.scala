@@ -276,4 +276,43 @@ class PqStoreSpec extends AnyFunSuite with SparkSpec {
     PqStore.snapshot(dir, "v1")
     assert(graft.sources.TableSink.listSnapshots(dir)("v1") === pinned)
   }
+
+  test("restore drops the sidecar before the flip: at each crash point, across a rebuild, a colliding append refuses and no id serves twice") {
+    import graft.sources.{IdLayoutSidecar, TableSink}
+    val dir = tmp()
+    PqStore.write(spark, dir, coded(base), "vec_id", numBuckets = 16)
+    PqStore.snapshot(dir, "v1")
+    val before = rows(PqStore.search(dir, queries, cells, cb, "vec_id", "embedding",
+      k = 5, nprobe = 8))
+    // The rebuild re-homes every row, and the re-seeded sidecar maps
+    // each id to its refit cell.
+    PqStore.rebuild(spark, dir, base, "vec_id", "embedding",
+      nlist = 8, m = 8, ksub = 16, dim = Dim)
+    val clash = base.filter(col("vec_id") % 7 === 0)
+    val like = spark.range(0).select(lit(0L).as("cell"),
+      lit(0L).as("vec_id"), array().cast("array<tinyint>").as("codes"))
+    def holds(liveCells: DataFrame, liveCb: PqOps.Codebook): Unit = {
+      val e = intercept[IllegalArgumentException](
+        PqStore.append(spark, dir, clash, liveCells, "vec_id", "embedding", liveCb,
+          Dim, version = 9L))
+      assert(e.getMessage.contains("already holds"), e.getMessage)
+      assert(TableSink.read(spark, dir, like).groupBy("vec_id").count()
+        .filter(col("count") > 1).isEmpty, "every id must have exactly one live row")
+    }
+    // Crash point 1: sidecar dropped, table not flipped (the rebuilt
+    // generation and its fit stay live).
+    IdLayoutSidecar.drop(dir)
+    holds(PqStore.readCells(spark, dir), PqStore.readCodebook(spark, dir))
+    // Crash point 2: sidecar dropped and table flipped, not backfilled.
+    IdLayoutSidecar.drop(dir)
+    TableSink.restore(dir, "v1")
+    holds(cells, cb)
+    // The restore re-run completes: sidecar re-seeded over the restored
+    // layout, the pre-rebuild state serves exactly.
+    PqStore.restore(dir, "v1")
+    assert(IdLayoutSidecar.exists(dir))
+    holds(cells, cb)
+    assert(rows(PqStore.search(dir, queries, cells, cb, "vec_id", "embedding",
+      k = 5, nprobe = 8)) === before)
+  }
 }

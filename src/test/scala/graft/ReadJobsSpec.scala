@@ -203,6 +203,36 @@ class ReadJobsSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
+  test("the cell-store lifecycle runs no more jobs than the hand-wired stores did") {
+    // Re-added ids (the re-home path) plus fresh ids, into stores that
+    // carry their id→cell sidecar. The bounds are the counts the
+    // per-store copies of this lifecycle ran on the same inputs.
+    val batch = emb.filter(col("vec_id") % 7 === 0)
+      .unionByName(emb.filter(col("vec_id") % 7 === 1)
+        .select((col("vec_id") + 100000L).as("vec_id"), col("embedding")))
+    val hdir = tmp("readjobs_cell_h")
+    val (_, hInit) = jobsOf(Hybrid.init(spark, hdir, docs, "doc_id", "text",
+      emb, "vec_id", "embedding", nlist = 8))
+    val (_, hAdd) = jobsOf(Hybrid.appendVectors(spark, hdir, batch,
+      "vec_id", "embedding", version = 1L))
+    val sdir = tmp("readjobs_cell_s")
+    val (_, sInit) = jobsOf(SemDedupStore.init(spark, sdir, emb,
+      "vec_id", "embedding", nlist = 8))
+    val (_, sProbe) = jobsOf(SemDedupStore.probe(spark, sdir, batch,
+      "vec_id", "embedding", eps = 0.9).collect())
+    val (_, sAbsorb) = jobsOf(SemDedupStore.absorb(spark, sdir, batch,
+      "vec_id", "embedding", version = 1L))
+    val got = Map("Hybrid.init" -> hInit, "Hybrid.appendVectors" -> hAdd,
+      "SemDedupStore.init" -> sInit, "SemDedupStore.probe" -> sProbe,
+      "SemDedupStore.absorb" -> sAbsorb)
+    val bound = Map("Hybrid.init" -> 31, "Hybrid.appendVectors" -> 21,
+      "SemDedupStore.init" -> 19, "SemDedupStore.probe" -> 13,
+      "SemDedupStore.absorb" -> 21)
+    info(s"jobs: $got")
+    val over = got.filter { case (k, n) => n > bound(k) }
+    assert(over.isEmpty, s"jobs over the bound: $over (all: $got)")
+  }
+
   /** The probe's former window form, the reference order: each query
     * id's nprobe best cells by a `row_number()` window over a broadcast
     * crossJoin — (query_id, qv, cell). */

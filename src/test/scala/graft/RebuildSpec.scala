@@ -119,7 +119,7 @@ class RebuildSpec extends AnyFunSuite with SparkSpec {
     SemDedupStore.init(spark, dirA, half, "vec_id", "embedding", nlist = 8)
     assert(!SemDedupStore.needsRebuild(dirA))
     SemDedupStore.absorb(spark, dirA, rest, "vec_id", "embedding",
-      version = 1L, assumeNewIds = true)
+      version = 1L)
     assert(SemDedupStore.needsRebuild(dirA),
       "absorbing ~the fitted volume again must trip the staleness cue")
     val cells = SemDedupStore.maintain(spark, dirA, nlist = 8)

@@ -74,6 +74,25 @@ class ReleaseSpec extends AnyFunSuite with SparkSpec {
       "table must return to the frozen generation")
   }
 
+  test("a cell-store member that moved on since the freeze verifies pinned and restores") {
+    import graft.operators.SemDedupStore
+    val emb = graft.core.Fixtures.load(spark, sf(), "embeddings")
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
+    val mdir = tmp("rel-manifest-sem")
+    val sem = tmp("rel-sem") + "/s"
+    SemDedupStore.init(spark, sem, emb.filter(col("vec_id") % 2 === 0),
+      "vec_id", "embedding", nlist = 4, numBuckets = 8)
+    def members() = SemDedupStore.kernel.read(spark, sem).count()
+    val at = members()
+    Release.freeze(spark, mdir, "v1", Seq(Release.Member("semdedup", sem)))
+    SemDedupStore.absorb(spark, sem, emb.filter(col("vec_id") % 2 =!= 0),
+      "vec_id", "embedding", version = 1L)
+    assert(members() > at)
+    assert(Release.verify(spark, mdir, "v1").filter(!col("ok")).count() === 0)
+    Release.restore(spark, mdir, "v1")
+    assert(members() === at, "the member table must return to the frozen generation")
+  }
+
   test("restore refuses a half-restorable release before anything mutates") {
     val mdir = tmp("rel-manifest2")
     val lm = tmp("rel-lm2") + "/s"

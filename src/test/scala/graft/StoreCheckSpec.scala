@@ -218,6 +218,57 @@ class StoreCheckSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
+  test("every cell store: fsck all-ok after init; a vanished fit dir is flagged; a second init refuses") {
+    import graft.operators.{IvfAnn, PqOps, PqStore, SemDedupStore}
+    import graft.pipelines.Hybrid
+    import graft.sources.CellStore
+    val emb = graft.core.Fixtures.load(spark, sf(), "embeddings")
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
+      .localCheckpoint(true)
+    val docs = emb.select(col("vec_id").as("doc_id"),
+      concat(lit("story number "), col("vec_id").cast("string")).as("text"))
+    val cells = IvfAnn.buildCells(emb, "vec_id", "embedding", nlist = 4)
+    val cb = PqOps.trainCodebooks(
+      IvfAnn.assignCells(emb, "vec_id", "embedding", cells)
+        .join(broadcast(cells), col("cell") === col("cell_id"))
+        .select(col("vec_id"),
+          zip_with(col("embedding"), col("cell_vec"), (x, y) => x - y).as("resid")),
+      "vec_id", "resid", m = 8, ksub = 16, dim = 64)
+    val coded = PqStore.encodeResiduals(
+      IvfAnn.assignCells(emb, "vec_id", "embedding", cells),
+      cells, "vec_id", "embedding", cb, 64)
+    // (kind, kernel, init, fsck, step that gives the store a fit dir of its own)
+    val stores: Seq[(String, CellStore, String => Unit,
+        String => org.apache.spark.sql.DataFrame, String => Unit)] = Seq(
+      ("hybrid", Hybrid.ann,
+        d => Hybrid.init(spark, d, docs, "doc_id", "text", emb, "vec_id", "embedding",
+          nlist = 4, numBuckets = 8),
+        d => Hybrid.fsck(spark, d), _ => ()),
+      ("semdedup", SemDedupStore.kernel,
+        d => SemDedupStore.init(spark, d, emb, "vec_id", "embedding", nlist = 4,
+          numBuckets = 8),
+        d => SemDedupStore.fsck(spark, d), _ => ()),
+      ("pq", PqStore.kernel,
+        d => PqStore.write(spark, d, coded, "vec_id", numBuckets = 8),
+        d => PqStore.fsck(spark, d),
+        d => { PqStore.rebuild(spark, d, emb, "vec_id", "embedding",
+          nlist = 4, m = 8, ksub = 16, dim = 64); () }))
+    stores.foreach { case (kind, kernel, init, fsck, refit) =>
+      val dir = freshDir(s"fsck-cell-$kind")
+      init(dir)
+      val rep = fsck(dir)
+      assert(failures(rep).isEmpty, s"$kind: ${failures(rep)}")
+      assert(rep.filter(col("check") === "centroids_resolve" && col("ok")).count() === 1,
+        s"$kind: centroid row")
+      val e = intercept[IllegalStateException](init(dir))
+      assert(e.getMessage.contains("already initialized"), s"$kind: ${e.getMessage}")
+      refit(dir)
+      assert(failures(fsck(dir)).isEmpty, s"$kind after refit")
+      DeltaParts.rmDir(kernel.fitDir(dir).getOrElse(fail(s"$kind: no fit dir")))
+      assert(failures(fsck(dir)).contains("centroids_resolve"), kind)
+    }
+  }
+
   test("a held lease reports advisory with the holder, never a failure") {
     val dir = freshDir("fsck-lease")
     upsert(dir, 0, 20, 1)
