@@ -133,7 +133,7 @@ case class MisraGriesAgg(
  * Additive compaction of STORED Misra–Gries summaries — the frequency
  * leg's maintenance aggregate, completing the standing-index pattern the
  * engine's other summaries follow (`SpanDedup.mergeSpanIndexes`,
- * `DedupOps.refreshBandIndexStored`, `IvfAnn.appendToIndex`): each batch
+ * `DedupOps.refreshBandIndexStored`, `CellStore.add`): each batch
  * persists its per-group `(misra_gries map, n)` pair, and this aggregate
  * folds any number of stored pairs into one summary that still honors
  * the MG bound over the UNION of the batches (Agarwal et al. 2012) —

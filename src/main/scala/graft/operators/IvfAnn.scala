@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.functions.CentroidKernels.Cents
 import graft.functions.VectorMeanFast
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
@@ -148,45 +148,45 @@ object IvfAnn {
     probeTopK(queries, centroidMatrix(cells), idCol, vecCol, k, nprobe, excludeSelf,
       quantizedCorpus, graft.functions.quant.dequantize(col("codes"), col("scale")))
 
+  /** The persisted SQ8 index's lifecycle ([[graft.sources.CellStore]]):
+    * (cell, <id>, scale, codes) laid out by `__cell_s` in `dir` itself —
+    * cell ids ride as strings because the layout hash is string-keyed.
+    * Refit dirs `cells_rK/` hold a rebuild's centroids; a never-rebuilt
+    * index's centroids are caller-held. The fit pointer is read only by
+    * `index.fsck` (and pinned by snapshots): [[annSearchQuantizedStored]]
+    * probes with the centroids its caller passes, so a caller that
+    * probes a rebuilt index must pass the ones [[rebuildIndex]]
+    * returned. */
+  val index = graft.sources.CellStore("persisted ANN index", "", "__cell_s",
+    Seq("cell" -> "bigint", "scale" -> "double", "codes" -> "array<tinyint>"),
+    "cells_r", None, "ivfsq8")
+
+  /** The cell-laid-out rows' layout column: the `cell` id as a string. */
+  private def withLayout(rows: DataFrame): DataFrame =
+    rows.withColumn("__cell_s", col("cell").cast("string"))
+
   /**
    * Persist a [[quantizeCells]] store as a value-addressable
    * [[graft.sources.TableSink]] laid out BY CELL (S9's index persistence
    * composed with the round's layout work): every row of a cell lands in
    * the bucket `hash(cell)` addresses, so a probe can open ONLY the
    * probed cells' parquet files — at 100 TB the serving path reads
-   * nprobe/nlist of the index's FILES, not just its rows. Cell ids ride
-   * as strings (`__cell_s`) because the layout hash is string-keyed.
+   * nprobe/nlist of the index's FILES, not just its rows. Run-once: a
+   * used dir is refused ([[graft.sources.CellStore.init]]).
    */
-  def writeIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
-                 quantizedCorpus: DataFrame, idCol: String,
-                 numBuckets: Int = 64): Unit =
-    graft.sources.TableSink.upsert(spark, dir,
-      quantizedCorpus.withColumn("__cell_s", col("cell").cast("string"))
-        .withColumn("__v", lit(0L)),
-      Seq(idCol), "__v", numBuckets, layoutCol = Some("__cell_s"),
-      // Staleness accounting rides the manifest ([[graft.sources
-      // .IndexMeta]]): base = rows the centroids were FITTED against,
-      // added = rows mutated under those fixed centroids since. The
-      // count collapses to a scan (no projection evaluates under it).
-      meta = Some(graft.sources.IndexMeta.fresh(quantizedCorpus.count())))
+  def writeIndex(spark: SparkSession, dir: String, quantizedCorpus: DataFrame,
+                 idCol: String, numBuckets: Int = 64): Unit =
+    index.init(spark, dir, withLayout(quantizedCorpus), numBuckets, idCol)(_ => ())
 
   /**
    * Incremental ADD to a persisted index: assign the new vectors to the
    * EXISTING cells (centroids stay fixed — the standard IVF add path;
    * re-training centroids is a separate bulk rebuild), quantize, and
-   * upsert. Only the buckets of the cells the new vectors land in (plus,
-   * for UPDATED ids, the cells their old rows sat in) are rewritten —
-   * index maintenance costs O(batch), not O(index), the same
-   * copy-on-write contract as [[graft.operators.DedupOps.refreshBandIndexStored]].
-   * Idempotent per `version`.
-   *
-   * Re-ADDING an id whose vector now lands in a DIFFERENT cell is a
-   * layout migration: the old copy must be rewritten away or a probe of
-   * the old cell would serve a stale vector. The default pays one
-   * column-pruned (id, cell) scan of the index to find such ids and
-   * re-homes them atomically in the same commit (`rehomeFromCol`);
-   * callers that KNOW every id is new skip the scan with
-   * `assumeNewIds = true` — the flag is a promise, not a check.
+   * commit through [[graft.sources.CellStore.add]]. Only the buckets of
+   * the cells the new vectors land in (plus, for a re-added id whose
+   * vector moved cells, the cell the id→cell sidecar places its old
+   * copy in — re-homed in the same commit) are rewritten: index
+   * maintenance costs O(batch), not O(index). Idempotent per `version`.
    *
    * Fixed centroids drift from the corpus distribution as adds
    * accumulate (recall erodes, never correctness of what IS probed) —
@@ -197,54 +197,20 @@ object IvfAnn {
    * host that checks the cue and runs the rebuild — call it once per
    * ingest cycle after the appends.
    */
-  def appendToIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
-                    newVectors: DataFrame, cells: DataFrame,
-                    idCol: String, vecCol: String, version: Long,
-                    assumeNewIds: Boolean = false): Unit = {
-    require(graft.sources.TableSink.layoutColOf(dir).isDefined,
-      s"no value-addressable index at '$dir' — write one with writeIndex first")
-    val assigned = quantizeCells(
-      assignCells(newVectors, idCol, vecCol, cells), idCol, vecCol)
-      .withColumn("__cell_s", col("cell").cast("string"))
-    val batch =
-      if (assumeNewIds) assigned.withColumn("__old_cell", lit(null).cast("string"))
-      else {
-        val like = spark.range(0).select(lit(0L).as(idCol), lit("").as("__cell_s"))
-        val old = graft.sources.TableSink.read(spark, dir, like)
-          .select(col(idCol), col("__cell_s").as("__prev"))
-        // Semi-join against the INPUT ids, not `assigned` — the batch's
-        // id set is the same either way, and probing with the raw input
-        // keeps the assignment pipeline (kernel assignment + quantize)
-        // out of the broadcast subtree, so it evaluates once.
-        assigned.join(broadcast(old
-            .join(newVectors.select(col(idCol)), Seq(idCol), "left_semi")),
-            Seq(idCol), "left")
-          .withColumn("__old_cell",
-            when(col("__prev").isNotNull && col("__prev") =!= col("__cell_s"),
-              col("__prev")))
-          .drop("__prev")
-      }
-    // Advance the staleness counter in the SAME commit as the rows it
-    // counts (a sidecar counter could desync across a crash; the
-    // manifest meta cannot). Re-adds inflate `added` slightly — the
-    // trigger is a maintenance heuristic, erring toward rebuilding.
-    val newMeta = graft.sources.IndexMeta.bumped(dir,
-      newVectors.select(col(idCol)).count())
-    graft.sources.TableSink.upsert(spark, dir,
-      batch.withColumn("__v", lit(version)),
-      Seq(idCol), "__v", rehomeFromCol = Some("__old_cell"), meta = newMeta)
-  }
+  def appendToIndex(spark: SparkSession, dir: String, newVectors: DataFrame,
+                    cells: DataFrame, idCol: String, vecCol: String,
+                    version: Long): Unit =
+    index.add(spark, dir, newVectors.select(col(idCol)), version, idCol) {
+      withLayout(quantizeCells(assignCells(newVectors, idCol, vecCol, cells), idCol, vecCol))
+    }
 
   /**
    * Incremental REMOVE from a persisted index — the deletion leg of the
    * index lifecycle (add = [[appendToIndex]], retrain = [[rebuildIndex]];
    * remove is what dedup verdicts and takedown requests propagate): drop
-   * every stored row whose id is in `ids`. Cost: one COLUMN-PRUNED
-   * (id, cell) scan locates the victims' cells (the same price
-   * [[appendToIndex]] pays for re-home detection — cell addressing is by
-   * VALUE, so an id's bucket is unknowable without the scan), then only
-   * the buckets of those cells rewrite ([[graft.sources.TableSink.delete]]'s
-   * copy-on-write contract). Ids not present are no-ops.
+   * every stored row whose id is in `ids`. The id→cell sidecar locates
+   * the victims' cells and only those cells' buckets rewrite
+   * ([[graft.sources.CellStore.remove]]). Ids not present are no-ops.
    *
    * Staleness accounting: removals count into `added` — a deletion is a
    * mutation AWAY from the distribution the centroids were fitted on,
@@ -254,50 +220,36 @@ object IvfAnn {
    * longer resembles the fit). Counting them makes [[needsRebuild]]
    * fire earlier, the safe direction.
    */
-  def removeFromIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
-                      ids: DataFrame, idCol: String): Unit = {
-    require(graft.sources.TableSink.layoutColOf(dir).isDefined,
-      s"no value-addressable index at '$dir' — write one with writeIndex first")
-    graft.sources.TableSink.deleteByIds(spark, dir, ids, idCol,
-      metaFor = victims => graft.sources.IndexMeta.bumped(dir, victims.count()))
-    ()
-  }
+  def removeFromIndex(spark: SparkSession, dir: String, ids: DataFrame,
+                      idCol: String): Unit =
+    index.remove(spark, dir, ids, idCol)
 
-  /**
-   * The centroid-rebuild staleness trigger — the [[appendToIndex]]
-   * analog of the ST4 basis StalenessGuard; the accounting semantics
-   * (and the parser) live in [[graft.sources.IndexMeta]], shared with
-   * every cell/cluster-laid-out store in the codebase.
-   */
+  /** The centroid-rebuild staleness trigger — the [[appendToIndex]]
+    * analog of the ST4 basis StalenessGuard; the accounting semantics
+    * live in [[graft.sources.IndexMeta]]. */
   def needsRebuild(dir: String, maxAddedFraction: Double = 0.5): Boolean =
-    graft.sources.IndexMeta.needsRebuild(dir, maxAddedFraction)
+    index.needsRebuild(dir, maxAddedFraction)
 
   /**
    * The scheduled bulk rebuild [[needsRebuild]] cues: re-fit centroids
-   * over the CURRENT corpus, re-assign + re-quantize every row, and
-   * replace the index in one atomic overwrite that resets the
-   * staleness accounting (`base` = this fit's rows, `added` = 0) in the
-   * same manifest flip. O(corpus) by design — schedule it like the ST4
-   * basis re-grid, not per batch. Returns the new cell centroids (the
-   * serving side must probe with the centroids the index was built
-   * under — stale centroids against a rebuilt index would probe wrong
-   * cells).
+   * over the CURRENT corpus into a fresh `cells_rK/`, re-assign +
+   * re-quantize every row, and swap in one atomic overwrite that resets
+   * the staleness accounting and carries the fit pointer
+   * ([[graft.sources.CellStore.rebuild]]; the bucket count stays the
+   * manifest's). O(corpus) by design — schedule it like the ST4 basis
+   * re-grid, not per batch. Returns the new cell centroids (the serving
+   * side must probe with the centroids the index was built under —
+   * stale centroids against a rebuilt index would probe wrong cells).
    */
-  def rebuildIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
-                   corpus: DataFrame, idCol: String, vecCol: String,
-                   nlist: Int, iters: Int = 3, numBuckets: Int = 64): DataFrame = {
-    val cells = buildCells(corpus, idCol, vecCol, nlist, iters)
-    val sq8 = quantizeCells(assignCells(corpus, idCol, vecCol, cells), idCol, vecCol)
-      .withColumn("__cell_s", col("cell").cast("string"))
-      .withColumn("__v", lit(0L))
-    graft.sources.TableSink.overwrite(spark, dir, sq8, Seq(idCol),
-      numBuckets = graft.sources.TableSink.numBucketsOf(dir).getOrElse(numBuckets),
-      layoutCol = Some("__cell_s"),
-      // Row-preserving pipeline: base = corpus rows (one cheap scan,
-      // not a second pass of the assignment joins).
-      meta = Some(graft.sources.IndexMeta.fresh(corpus.select(col(idCol)).count())))
-    cells
-  }
+  def rebuildIndex(spark: SparkSession, dir: String, corpus: DataFrame,
+                   idCol: String, vecCol: String, nlist: Int,
+                   iters: Int = 3): DataFrame =
+    index.rebuild(spark, dir, idCol) { fit =>
+      val cells = buildCells(corpus, idCol, vecCol, nlist, iters)
+      cells.write.parquet(fit)
+      (withLayout(quantizeCells(assignCells(corpus, idCol, vecCol, cells), idCol, vecCol)),
+        cells)
+    }
 
   /**
    * The scheduled maintenance host for [[needsRebuild]] — the entry
@@ -314,13 +266,11 @@ object IvfAnn {
    * `maintain(corpus).foreach(newCells = _)` — appends stay O(batch),
    * the rebuild amortizes to the configured staleness fraction.
    */
-  def maintain(spark: org.apache.spark.sql.SparkSession, dir: String,
-               corpus: DataFrame, idCol: String, vecCol: String,
-               nlist: Int, iters: Int = 3,
+  def maintain(spark: SparkSession, dir: String, corpus: DataFrame,
+               idCol: String, vecCol: String, nlist: Int, iters: Int = 3,
                maxAddedFraction: Double = 0.5): Option[DataFrame] =
-    if (needsRebuild(dir, maxAddedFraction))
-      Some(rebuildIndex(spark, dir, corpus, idCol, vecCol, nlist, iters))
-    else None
+    index.maintain(dir, maxAddedFraction)(
+      rebuildIndex(spark, dir, corpus, idCol, vecCol, nlist, iters))
 
   /** The nprobe-nearest cell ids across all queries — driver-side and
     * bounded (≤ |queries| × nprobe ids; queries are the small side of
@@ -376,22 +326,18 @@ object IvfAnn {
   def annSearchQuantizedStored(dir: String, queries: DataFrame, cells: DataFrame,
                                idCol: String, vecCol: String, k: Int, nprobe: Int,
                                excludeSelf: Boolean = true): DataFrame = {
-    val spark = queries.sparkSession
     // A wrong path or a table not written by [[writeIndex]] must fail
     // loudly: bucketIdsFor returns an empty set for BOTH "no table" and
     // "no layout column", and an empty probe would silently return zero
     // neighbors for every query.
-    require(graft.sources.TableSink.tableExists(dir),
-      s"no persisted ANN index at '$dir' (no table manifest) — " +
-        "write one with IvfAnn.writeIndex first")
+    index.requireExists(dir)
     require(graft.sources.TableSink.layoutColOf(dir).isDefined,
       s"table at '$dir' has no layout column — it was not written by " +
         "IvfAnn.writeIndex, so cell probes cannot address its buckets")
     val cents = centroidMatrix(cells)
-    val like = spark.range(0).select(lit(0L).as("cell"), lit(0L).as(idCol),
-      lit(0.0).as("scale"), array().cast("array<tinyint>").as("codes"))
     probeTopK(queries, cents, idCol, vecCol, k, nprobe, excludeSelf,
-      readProbedCells(dir, like, queries, cents, vecCol, nprobe),
+      readProbedCells(dir, index.like(queries.sparkSession, dir, idCol), queries, cents,
+        vecCol, nprobe),
       graft.functions.quant.dequantize(col("codes"), col("scale")))
   }
 

@@ -23,16 +23,13 @@ import org.apache.spark.sql.functions._
  *    with the FIXED codebook, upsert (only the touched cells' buckets
  *    rewrite). NEW ids only — the [[Bm25Store.append]] disjoint-ids
  *    contract, ENFORCED fail-loud (not just documented): every append
- *    probes the [[graft.sources.IdLayoutSidecar]] for its batch ids
- *    (O(batch) bucket-pruned — the SemDedupStore idiom) and REFUSES a
- *    collision, because the cell-laid-out table cannot re-home an id
- *    whose vector moved cells without the scan
- *    [[IvfAnn.appendToIndex]] documents — a silent second copy in a
- *    different cell would serve a deleted-in-spirit vector forever.
- *    [[remove]] the old id first, then append.
+ *    resolves its batch ids through the [[graft.sources.IdLayoutSidecar]]
+ *    (O(batch) bucket-pruned) and REFUSES a collision. The other cell
+ *    stores re-home a re-added id through that same sidecar; this one
+ *    takes an update only as an explicit [[remove]] then append.
  *  - [[remove]]: bucket-pruned copy-on-write delete
- *    ([[graft.sources.TableSink.deleteByIds]]) — one column-pruned
- *    (id, cell) scan locates victims, only their buckets rewrite.
+ *    ([[graft.sources.CellStore.remove]]) — the sidecar locates the
+ *    victims' cells, only their buckets rewrite.
  *  - [[search]]: probed-cell file pruning + reconstruct-in-scan
  *    (= ADC) shortlist; the caller refines the shortlist against float
  *    vectors exactly as in x_ann_ivf_pq — spec-pinned equal to the
@@ -177,9 +174,9 @@ object PqStore extends graft.sources.CellStore.Lifecycle {
         cells, idCol, vecCol, cb, dim))
     }
 
-  /** Bucket-pruned takedown; removals advance `added` (a mutation away
-    * from the fitted distribution — the [[IvfAnn.removeFromIndex]]
-    * accounting argument) and a removed id is a legal future append. */
+  /** Bucket-pruned takedown ([[graft.sources.CellStore.remove]]);
+    * removals advance `added` (a mutation away from the fitted
+    * distribution) and a removed id is a legal future append. */
   def remove(spark: SparkSession, dir: String, ids: DataFrame,
              idCol: String): Unit =
     kernel.remove(spark, dir, ids, idCol)

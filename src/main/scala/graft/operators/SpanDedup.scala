@@ -283,8 +283,9 @@ object SpanDedup {
    * uniformly distributed, so any batch dirties essentially every bucket
    * of a copy-on-write table and a per-batch upsert would degrade to
    * O(index) rewrites; the scheduled merge amortizes exactly like
-   * [[IvfAnn.maintain]]'s rebuild. Persisted (parquet / TableSink), the
-   * `n_docs >= minDocs` admission read pushes its filter into the scan.
+   * [[graft.sources.CellStore.maintain]]'s rebuild. Persisted (parquet /
+   * TableSink), the `n_docs >= minDocs` admission read pushes its filter
+   * into the scan.
    */
   def spanDigestIndex(corpus: DataFrame, idCol: String, textCol: String,
                       k: Int): DataFrame = {

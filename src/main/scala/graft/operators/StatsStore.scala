@@ -34,7 +34,7 @@ import graft.sources.AdditiveStore
  * INSERT-ONLY by design: Greenwald–Khanna summaries are not
  * subtractable, so this store has no delete path (unlike the engine's
  * other standing stores — [[Bm25Store.delete]],
- * [[IvfAnn.removeFromIndex]], [[graft.pipelines.Admission.unadmit]]).
+ * [[graft.sources.CellStore.remove]], [[graft.pipelines.Admission.unadmit]]).
  * Removing documents from the tracked distribution means re-running
  * [[init]] over the surviving corpus on a fresh dir — schedule it like
  * any bulk rebuild.

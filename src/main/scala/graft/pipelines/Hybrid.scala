@@ -27,8 +27,8 @@ import org.apache.spark.sql.functions._
  *  - `ann/`  — a value-addressable [[graft.sources.TableSink]] of (cell, id, vec) laid
  *    out by cell — FLOAT vectors, so a full probe (nprobe = nlist) is
  *    EXACT brute-force kNN and the spec can pin stored == in-memory
- *    fusion; swap in [[IvfAnn.writeIndex]]'s SQ8 store when the 4×
- *    memory/IO saving outweighs exactness. Its lifecycle (centroid fit
+ *    fusion; swap in the SQ8 [[IvfAnn.index]] (the same kernel) when the
+ *    4× memory/IO saving outweighs exactness. Its lifecycle (centroid fit
  *    dirs `cells/` and `cells_rK/`, id→cell sidecar, accounting,
  *    snapshots) is the [[graft.sources.CellStore]] kernel's.
  *
@@ -158,10 +158,10 @@ object Hybrid {
    * corpus from the fixed centroids' fit (recall erosion, never
    * correctness): re-fit nlist centroids FROM THE STORED MEMBERS into a
    * fresh `cells_rK/`, re-home every row, and swap atomically
-   * ([[graft.sources.CellStore.rebuild]]). O(corpus) by design —
-   * schedule it like [[graft.operators.IvfAnn.rebuildIndex]], not per
-   * batch. The BM25 leg is untouched (its maintenance is
-   * [[Bm25Store.compact]]). Returns the new centroids.
+   * ([[graft.sources.CellStore.rebuild]], the refit every cell store
+   * shares). O(corpus) by design — schedule it, not per batch. The
+   * BM25 leg is untouched (its maintenance is [[Bm25Store.compact]]).
+   * Returns the new centroids.
    */
   def rebuild(spark: SparkSession, storeDir: String, nlist: Int,
               iters: Int = 3): DataFrame =
@@ -186,8 +186,8 @@ object Hybrid {
     * refresh pair: the lexical side tombstones via [[Bm25Store.delete]]
     * (O(batch) part append, df stale until the scheduled compact — the
     * Lucene contract), the semantic side drops the ids' rows from the
-    * cell-laid-out table (one column-pruned (id, cell) scan + copy-on-
-    * write of only the victims' cells' buckets). After this call a
+    * cell-laid-out table ([[graft.sources.CellStore.remove]]: the id→cell
+    * sidecar locates them, only their cells' buckets rewrite). After this call a
     * removed document can never surface from [[search]] — neither run
     * serves it. Replay-idempotent per `name` on the lexical leg; the
     * semantic delete is key-idempotent by construction. */

@@ -190,7 +190,8 @@ private[graft] object QVector {
         .localCheckpoint(true)
       PqOps.trainCodebooks(withCells, "vec_id", "resid", m = 16, ksub = 16, dim = 64)
     }
-    lazy val dir = tmpStore("pq_store")
+    // inside the temp dir, so its `_idmap` sidecar is emptied with it
+    lazy val dir = tmpStore("pq_store") + "/ix"
     lazy val codedOf = (df: org.apache.spark.sql.DataFrame) =>
       graft.operators.PqStore.encodeResiduals(
         IvfAnn.assignCells(df, "vec_id", "embedding", cells),
@@ -251,7 +252,7 @@ private[graft] object QVector {
     * no-removed-served/recall gates in serve. */
   private val annDeletePhased: Phased = (s, d) => {
     lazy val e = T(s, d, "embeddings")
-    lazy val dir = tmpStore("ann_del")
+    lazy val dir = tmpStore("ann_del") + "/ix" // sidecar inside, as pq_store
     lazy val cells = IvfAnn.buildCells(e, "vec_id", "embedding", nlist = 16)
     val init = () => {
       val sq8 = IvfAnn.quantizeCells(

@@ -27,7 +27,8 @@ import org.apache.spark.sql.functions._
  *  - the [[add]] commit: sidecar resolve, intent, then the upsert with
  *    the accounting bump — a store with no sidecar adopts one first,
  *    with one backfill;
- *  - [[remove]], [[needsRebuild]] / [[maintain]];
+ *  - [[remove]], its victims located through the same sidecar, and
+ *    [[needsRebuild]] / [[maintain]];
  *  - snapshot / pre-check / dropSnapshot / restore: the table generation
  *    pins its fit through the pointer (fit dirs are write-once), so no
  *    fit copy is ever taken;
@@ -111,7 +112,7 @@ final case class CellStore(what: String, table: String, layoutCol: String,
     requireExists(root)
     val t = tableDir(root)
     val assigned = rows
-    if (!IdLayoutSidecar.exists(t)) IdLayoutSidecar.backfill(spark, t, idCol)
+    adopt(spark, t, idCol)
     val prior = IdLayoutSidecar.resolve(spark, t, ids, idCol)
     vet(prior)
     // Materialized ONCE: the intent, the upsert and the bump all
@@ -130,16 +131,31 @@ final case class CellStore(what: String, table: String, layoutCol: String,
       meta = IndexMeta.bumped(t, batch.count()))
   }
 
-  /** Remove ids (a frame with `idCol`): bucket-pruned delete, the
-    * removals counted into the accounting, the sidecar rows dropped. */
+  /** A store with no sidecar adopts one, with one backfill. */
+  private def adopt(spark: SparkSession, t: String, idCol: String): Unit =
+    if (!IdLayoutSidecar.exists(t)) IdLayoutSidecar.backfill(spark, t, idCol)
+
+  /** Remove ids (a frame with `idCol`): the ids' sidecar rows name the
+    * only buckets that can hold them, those buckets rewrite without the
+    * ids, the rows found are counted into the accounting in the same
+    * commit (a row a crash left stale counts too — the direction that
+    * rebuilds sooner), and then the sidecar rows drop. Absent ids are
+    * no-ops. */
   def remove(spark: SparkSession, root: String, ids: DataFrame,
              idCol: String = "id"): Unit =
       WriterLease.withLease(root, s"$lease-remove") {
     requireExists(root)
     val t = tableDir(root)
-    TableSink.deleteByIds(spark, t, ids, idCol,
-      metaFor = victims => IndexMeta.bumped(t, victims.count()))
-    IdLayoutSidecar.removeIds(spark, t, ids, idCol)
+    adopt(spark, t, idCol)
+    // Materialized ONCE: the count and both deletes consume it. The
+    // delete dirties the buckets of `cell` and `prev_cell` alike (the
+    // copy is in one of them), so no read of the table has to tell which.
+    val found = IdLayoutSidecar.rowsOf(spark, t, ids, idCol).localCheckpoint(true)
+    TableSink.delete(spark, t,
+      found.select(col(idCol), explode(array(col("cell"), col("prev_cell"))).as(layoutCol))
+        .filter(col(layoutCol).isNotNull),
+      Seq(idCol), IndexMeta.bumped(t, found.count()))
+    IdLayoutSidecar.removeIds(spark, t, found, idCol)
   }
 
   /** Has the table drifted past `maxAddedFraction` of its fit? */

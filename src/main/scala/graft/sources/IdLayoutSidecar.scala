@@ -26,11 +26,11 @@ import org.apache.spark.sql.functions._
  * those must [[backfill]] once before relying on it ([[CellStore.add]]
  * adopts a sidecar-less store that way).
  *
- * Deletions: [[TableSink.deleteByIds]] on the main table leaves the
- * sidecar row stale — harmless ([[resolve]] finds no copy in the
- * candidate buckets and reports the id absent) but callers should
- * [[removeIds]] in the same maintenance call to keep the sidecar
- * garbage-free.
+ * Deletions: [[CellStore.remove]] reads the ids' sidecar rows
+ * ([[rowsOf]]), deletes the ids from the main table's buckets those rows
+ * name, then [[removeIds]] the rows. A crash between the two leaves a
+ * stale sidecar row — harmless: [[resolve]] finds no copy in the
+ * candidate buckets and reports the id absent.
  */
 object IdLayoutSidecar {
 
@@ -91,10 +91,7 @@ object IdLayoutSidecar {
       throw new IllegalArgumentException(
         s"table at '$tableDir' has no layout column"))
     val idsD = ids.select(col(idCol)).distinct().localCheckpoint(true)
-    val cand = TableSink.readBuckets(spark, dir(tableDir),
-        sidecarLike(spark, tableDir, idCol),
-        TableSink.keyBucketIdsFor(dir(tableDir), idsD))
-      .join(broadcast(idsD), Seq(idCol), "left_semi")
+    val cand = rowsOf(spark, tableDir, idsD, idCol)
     // candidate cells: driver-bounded by 2·|batch| and by the cell count
     val cells = cand
       .select(explode(array(col("cell"), col("prev_cell"))).as("__c"))
@@ -107,6 +104,17 @@ object IdLayoutSidecar {
         TableSink.bucketIdsFor(spark, tableDir, cells))
       .select(col(idCol), col(layout).as("__cur"))
       .join(broadcast(idsD), Seq(idCol), "left_semi")
+  }
+
+  /** The sidecar rows (id, cell, prev_cell) of those of `ids` that have
+    * one — O(batch): only the ids' key buckets open. Every copy of such
+    * an id lies in the bucket of its `cell` or its `prev_cell`. */
+  private[sources] def rowsOf(spark: SparkSession, tableDir: String,
+                              ids: DataFrame, idCol: String = "id"): DataFrame = {
+    val keys = ids.select(col(idCol))
+    TableSink.readBuckets(spark, dir(tableDir), sidecarLike(spark, tableDir, idCol),
+        TableSink.keyBucketIdsFor(dir(tableDir), keys))
+      .join(broadcast(keys), Seq(idCol), "left_semi")
   }
 
   /** Record the batch's intended locations BEFORE the main-table

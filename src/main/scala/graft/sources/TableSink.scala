@@ -252,32 +252,6 @@ object TableSink {
     * layout-bucketed table the drop frame must carry the layout column
     * (with the value the stored row was written under) so the right
     * bucket goes dirty. */
-  /** Delete rows of a LAYOUT-bucketed table by key only — the shared
-    * victims-scan idiom ([[graft.operators.IvfAnn.removeFromIndex]] and
-    * both store `remove`s delegate here): bucket addressing is by the
-    * layout VALUE, so one column-pruned (key, layout) scan locates the
-    * victims' buckets, the scan is materialized ONCE (it feeds both the
-    * dirty-bucket collect and the anti-join merge), and only those
-    * buckets rewrite. Absent keys are no-ops. */
-  def deleteByIds(spark: SparkSession, dir: String, ids: DataFrame,
-                  idCol: String,
-                  metaFor: DataFrame => Option[String] = _ => None): DataFrame = {
-    val layout = layoutColOf(dir).getOrElse(throw new IllegalArgumentException(
-      s"deleteByIds needs a layout-bucketed table at '$dir' — plain keyed " +
-        "tables delete by key directly (TableSink.delete)"))
-    val like = spark.range(0).select(lit(0L).as(idCol), lit("").as(layout))
-    val victims = read(spark, dir, like)
-      .select(col(idCol), col(layout))
-      .join(broadcast(ids.select(col(idCol))), Seq(idCol), "left_semi")
-      .localCheckpoint(true)
-    // metaFor sees the MATERIALIZED victims (e.g. to fold their count
-    // into staleness accounting) and its result commits atomically WITH
-    // the delete — a separate meta-only commit would no-op on the empty
-    // dirty set.
-    delete(spark, dir, victims, Seq(idCol), metaFor(victims))
-    victims
-  }
-
   def delete(spark: SparkSession, dir: String, keysToDrop: DataFrame,
              keys: Seq[String], meta: Option[String] = None): Unit = {
     // Deleting from an absent table is a no-op, NOT a create: letting

@@ -242,7 +242,7 @@ class AnnSpec extends AnyFunSuite with SparkSpec {
     assert(!IvfAnn.needsRebuild(dir),
       "a freshly built index carries no staleness")
     IvfAnn.appendToIndex(spark, dir, drifted, cells0, "vec_id", "embedding",
-      version = 1L, assumeNewIds = true)
+      version = 1L)
     assert(IvfAnn.needsRebuild(dir),
       "adds past the fraction of the fitted base must cue a rebuild")
     // The rebuild re-fits centroids on the FULL corpus, atomically
@@ -289,7 +289,7 @@ class AnnSpec extends AnyFunSuite with SparkSpec {
     var rebuilds = 0
     def cycle(batch: org.apache.spark.sql.DataFrame, version: Long): Unit = {
       IvfAnn.appendToIndex(spark, dir, batch, serving, "vec_id", "embedding",
-        version, assumeNewIds = true)
+        version)
       IvfAnn.maintain(spark, dir, e, "vec_id", "embedding", nlist = 16).foreach { c =>
         serving = c; rebuilds += 1
       }

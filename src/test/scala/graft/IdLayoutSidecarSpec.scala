@@ -129,17 +129,20 @@ class IdLayoutSidecarSpec extends AnyFunSuite with SparkSpec {
   test("removeIds keeps the sidecar garbage-free; resolve refuses a never-backfilled table") {
     val annDir = s"${freshStore()}/ann"
     import spark.implicits._
-    val (id0, _) = fullProjection(annDir).orderBy("id").limit(1)
+    val (id0, cell0) = fullProjection(annDir).orderBy("id").limit(1)
       .collect().map(r => (r.getLong(0), r.getString(1))).head
-    TableSink.deleteByIds(spark, annDir, Seq(id0).toDF("id"), "id")
-    IdLayoutSidecar.removeIds(spark, annDir, Seq(id0).toDF("id"))
-    val got = IdLayoutSidecar.resolve(spark, annDir, Seq(id0).toDF("id")).count()
-    assert(got == 0L, "a deleted id must resolve to absent")
     val sideLike = spark.range(0).select(lit(0L).as("id"),
       lit("").as("cell"), lit("").as("prev_cell"))
-    val stale = TableSink.read(spark, IdLayoutSidecar.dir(annDir), sideLike)
+    def sidecarRows() = TableSink.read(spark, IdLayoutSidecar.dir(annDir), sideLike)
       .filter(col("id") === id0).count()
-    assert(stale == 0L, "removeIds must drop the sidecar row")
+    // the main-table row alone — the state a crash between a remove's
+    // table delete and its removeIds leaves
+    TableSink.delete(spark, annDir, Seq((id0, cell0)).toDF("id", "__cell_s"), Seq("id"))
+    val got = IdLayoutSidecar.resolve(spark, annDir, Seq(id0).toDF("id")).count()
+    assert(got == 0L, "a deleted id must resolve to absent despite its stale sidecar row")
+    assert(sidecarRows() == 1L, "the stale sidecar row is still there")
+    IdLayoutSidecar.removeIds(spark, annDir, Seq(id0).toDF("id"))
+    assert(sidecarRows() == 0L, "removeIds must drop the sidecar row")
     val e = intercept[IllegalArgumentException](
       IdLayoutSidecar.resolve(spark, "/tmp/idmap_nowhere_" + id0, Seq(id0).toDF("id")))
     assert(e.getMessage.contains("sidecar"))

@@ -7,7 +7,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.TestBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.execution.SparkPlanInfo
-import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate,
+  SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -205,8 +206,12 @@ class ReadJobsSpec extends AnyFunSuite with SparkSpec {
 
   test("the cell-store lifecycle runs no more jobs than the hand-wired stores did") {
     // Re-added ids (the re-home path) plus fresh ids, into stores that
-    // carry their id→cell sidecar. The bounds are the counts the
-    // per-store copies of this lifecycle ran on the same inputs.
+    // carry their id→cell sidecar. The bounds are the counts measured
+    // on the kernel. Up to SemDedupStore.absorb they are the counts the
+    // per-store copies of this lifecycle ran on the same inputs, or
+    // fewer; the SQ8 add and remove and the Hybrid remove run more jobs
+    // than their full-scan forms did (12, 8 and 22), each over the
+    // batch's buckets instead of every file of the table.
     val batch = emb.filter(col("vec_id") % 7 === 0)
       .unionByName(emb.filter(col("vec_id") % 7 === 1)
         .select((col("vec_id") + 100000L).as("vec_id"), col("embedding")))
@@ -222,15 +227,104 @@ class ReadJobsSpec extends AnyFunSuite with SparkSpec {
       "vec_id", "embedding", eps = 0.9).collect())
     val (_, sAbsorb) = jobsOf(SemDedupStore.absorb(spark, sdir, batch,
       "vec_id", "embedding", version = 1L))
+    val qdir = tmp("readjobs_cell_q")
+    val fit = IvfAnn.buildCells(emb, "vec_id", "embedding", nlist = 8)
+    IvfAnn.writeIndex(spark, qdir, IvfAnn.quantizeCells(
+      IvfAnn.assignCells(emb, "vec_id", "embedding", fit), "vec_id", "embedding"),
+      "vec_id", numBuckets = 8)
+    val (_, qAdd) = jobsOf(IvfAnn.appendToIndex(spark, qdir, batch, fit,
+      "vec_id", "embedding", version = 1L))
+    val gone = emb.filter(col("vec_id") % 7 === 2).select(col("vec_id").as("doc_id"))
+    val (_, qRemove) = jobsOf(IvfAnn.removeFromIndex(spark, qdir,
+      gone.select(col("doc_id").as("vec_id")), "vec_id"))
+    val (_, hRemove) = jobsOf(Hybrid.removeDocuments(spark, hdir, gone, "doc_id"))
     val got = Map("Hybrid.init" -> hInit, "Hybrid.appendVectors" -> hAdd,
       "SemDedupStore.init" -> sInit, "SemDedupStore.probe" -> sProbe,
-      "SemDedupStore.absorb" -> sAbsorb)
+      "SemDedupStore.absorb" -> sAbsorb, "IvfAnn.appendToIndex" -> qAdd,
+      "IvfAnn.removeFromIndex" -> qRemove, "Hybrid.removeDocuments" -> hRemove)
     val bound = Map("Hybrid.init" -> 31, "Hybrid.appendVectors" -> 21,
       "SemDedupStore.init" -> 19, "SemDedupStore.probe" -> 13,
-      "SemDedupStore.absorb" -> 21)
+      "SemDedupStore.absorb" -> 21, "IvfAnn.appendToIndex" -> 21,
+      "IvfAnn.removeFromIndex" -> 14, "Hybrid.removeDocuments" -> 24)
     info(s"jobs: $got")
     val over = got.filter { case (k, n) => n > bound(k) }
     assert(over.isEmpty, s"jobs over the bound: $over (all: $got)")
+  }
+
+  /** The data files of the table at `dir` (not its `_idmap` sidecar)
+    * that the SQL scans `body` runs open: each scan's Location lists its
+    * root paths, and Spark opens every data file under a listed root. */
+  private def filesOpened(dir: String)(body: => Unit): Int = {
+    val roots = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    def collect(p: SparkPlanInfo): Unit = {
+      p.metadata.get("Location").foreach("""[^\[\], ]+""".r.findAllIn(_)
+        .filter(_.contains(s"$dir/")).foreach(roots.add))
+      p.children.foreach(collect)
+    }
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => collect(s.sparkPlanInfo)
+        case a: SparkListenerSQLAdaptiveExecutionUpdate => collect(a.sparkPlanInfo)
+        case _ => ()
+      }
+    }
+    val sc = spark.sparkContext
+    val lengthKey = "spark.sql.maxMetadataStringLength" // list every root path
+    spark.conf.set(lengthKey, "1000000")
+    TestBus.drain(sc)
+    sc.addSparkListener(listener)
+    try { body; TestBus.drain(sc) }
+    finally { sc.removeSparkListener(listener); spark.conf.unset(lengthKey) }
+    import scala.jdk.CollectionConverters._
+    roots.asScala.toSeq.flatMap { r =>
+      val s = java.nio.file.Files.walk(java.nio.file.Paths.get(new Path(r).toUri.getPath))
+      try s.iterator.asScala.filter(java.nio.file.Files.isRegularFile(_))
+        .filterNot(f => Seq("_", ".").exists(f.getFileName.toString.startsWith))
+        .map(_.toString).toList
+      finally s.close()
+    }.distinct.size
+  }
+
+  test("a one-id re-homing add and a one-id remove open fewer of the table's files than it has") {
+    import spark.implicits._
+    val vecsIn = emb.select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
+      .localCheckpoint(true)
+    val fit = IvfAnn.buildCells(vecsIn, "vec_id", "embedding", nlist = 16)
+    val qdir = tmp("readjobs_files_q")
+    IvfAnn.writeIndex(spark, qdir, IvfAnn.quantizeCells(
+      IvfAnn.assignCells(vecsIn, "vec_id", "embedding", fit), "vec_id", "embedding"),
+      "vec_id", numBuckets = 16)
+    val hdir = tmp("readjobs_files_h")
+    Hybrid.init(spark, hdir, docs, "doc_id", "text", vecsIn, "vec_id", "embedding",
+      nlist = 16, numBuckets = 16)
+    // (store, table dir, its id column, a re-homing add, a remove of one id)
+    val stores: Seq[(String, String, String, (DataFrame, Long) => Unit, Long => Unit)] = Seq(
+      ("IvfAnn", qdir, "vec_id",
+        (moved, v) => IvfAnn.appendToIndex(spark, qdir, moved, fit, "vec_id", "embedding", v),
+        id => IvfAnn.removeFromIndex(spark, qdir, Seq(id).toDF("vec_id"), "vec_id")),
+      ("Hybrid", s"$hdir/ann", "id",
+        (moved, v) => Hybrid.appendVectors(spark, hdir, moved, "vec_id", "embedding", v),
+        id => Hybrid.removeDocuments(spark, hdir, Seq(id).toDF("doc_id"), "doc_id")))
+    for ((name, table, idCol, add, remove) <- stores) {
+      val like = spark.range(0).select(lit(0L).as(idCol), lit(0L).as("cell"))
+      def cells() = TableSink.read(spark, table, like).select(col(idCol), col("cell"))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      def files() = TableSink.read(spark, table, like).inputFiles.length
+      val before = cells()
+      val (x, cx) = before.minBy(_._1)
+      // x takes the vector of an id stored in another cell
+      val y = before.collectFirst { case (i, c) if c != cx => i }.get
+      val moved = vecsIn.filter(col("vec_id") === y).select(lit(x).as("vec_id"), col("embedding"))
+      val total = files()
+      val added = filesOpened(table)(add(moved, 1L))
+      assert(cells()(x) == before(y), s"$name: the add must re-home id $x")
+      assert(added > 0 && added < total, s"$name add opened $added of $total files")
+      val total2 = files()
+      val removed = filesOpened(table)(remove(x))
+      assert(!cells().contains(x), s"$name: id $x removed")
+      assert(removed > 0 && removed < total2, s"$name remove opened $removed of $total2 files")
+      info(s"$name: add opened $added of $total files, remove $removed of $total2")
+    }
   }
 
   /** The probe's former window form, the reference order: each query

@@ -237,6 +237,8 @@ class StoreCheckSpec extends AnyFunSuite with SparkSpec {
     val coded = PqStore.encodeResiduals(
       IvfAnn.assignCells(emb, "vec_id", "embedding", cells),
       cells, "vec_id", "embedding", cb, 64)
+    val sq8 = IvfAnn.quantizeCells(
+      IvfAnn.assignCells(emb, "vec_id", "embedding", cells), "vec_id", "embedding")
     // (kind, kernel, init, fsck, step that gives the store a fit dir of its own)
     val stores: Seq[(String, CellStore, String => Unit,
         String => org.apache.spark.sql.DataFrame, String => Unit)] = Seq(
@@ -252,7 +254,11 @@ class StoreCheckSpec extends AnyFunSuite with SparkSpec {
         d => PqStore.write(spark, d, coded, "vec_id", numBuckets = 8),
         d => PqStore.fsck(spark, d),
         d => { PqStore.rebuild(spark, d, emb, "vec_id", "embedding",
-          nlist = 4, m = 8, ksub = 16, dim = 64); () }))
+          nlist = 4, m = 8, ksub = 16, dim = 64); () }),
+      ("sq8", IvfAnn.index,
+        d => IvfAnn.writeIndex(spark, d, sq8, "vec_id", numBuckets = 8),
+        d => IvfAnn.index.fsck(spark, d),
+        d => { IvfAnn.rebuildIndex(spark, d, emb, "vec_id", "embedding", nlist = 4); () }))
     stores.foreach { case (kind, kernel, init, fsck, refit) =>
       val dir = freshDir(s"fsck-cell-$kind")
       init(dir)
